@@ -75,16 +75,16 @@ _SHINGLE_SQL = f"""
 # this is a no-op (no added exchange). Partition count per (path, width)
 # is probed once per process; values are row-identical either way (every
 # query here is order-insensitive).
-_SCAN_PARTS: dict[str, int] = {}
+_SCAN_PARTS: dict[tuple[str, int], int] = {}
 
 
 def _spread(df: DataFrame, key: str) -> DataFrame:
     spark = df.sparkSession
     dp = spark.sparkContext.defaultParallelism
-    n = _SCAN_PARTS.get(key)
+    n = _SCAN_PARTS.get((key, dp))
     if n is None:
         n = df.rdd.getNumPartitions()
-        _SCAN_PARTS[key] = n
+        _SCAN_PARTS[(key, dp)] = n
     return df.repartition(dp) if n < dp else df
 
 

@@ -1776,7 +1776,10 @@ def test_token_budget_sample(spark):
 def test_token_budget_precomputed_n_tokens_col(spark):
     # r8: producers that already carry the token count (curate_full's
     # survivors) pass n_tokens_col and skip re-tokenizing the text —
-    # rows must be identical to the text-derived path in both modes
+    # rows must be identical to the text-derived path in both modes.
+    # Every 10th doc has empty text and a NULL count, which must count
+    # as 0 tokens as empty text does; doc 3 heads stratum s0, where a
+    # NULL count would make its running sum NULL and drop it
     from pyspark.sql import functions as F
 
     from webextract.functions.hygiene import token_budget_sample
@@ -1784,9 +1787,10 @@ def test_token_budget_precomputed_n_tokens_col(spark):
 
     docs = spark.createDataFrame([
         Row(doc_id=i, src=f"s{i % 3}", prio=float((i * 7) % 11),
-            text=" ".join(["tok"] * ((i % 9) + 1)))
+            text=" ".join(["tok"] * ((i % 9) + 1)) if i % 10 != 3 else "")
         for i in range(60)
-    ]).withColumn("nt", token_count(norm_text("text")))
+    ]).withColumn("nt", F.when(F.col("text") != "",
+                               token_count(norm_text("text"))))
     for mode in ("exact", "approx"):
         via_text = token_budget_sample(
             docs, budget_tokens=12, strata_col="src", priority_col="prio",

@@ -257,6 +257,37 @@ def test_keep_alive_connection_reuse(server):
         conn.close()
 
 
+@pytest.mark.parametrize("words", [3, 14_000])
+def test_keep_alive_round_trip_does_not_stall(server, words):
+    # a response sent as two writes (head, then body) with Nagle on
+    # waits for the client's delayed ACK of the head, >= 40 ms per
+    # request on Linux; one write with TCP_NODELAY answers in a few ms.
+    # Covers a small response and one over the ~64 KiB loopback MSS.
+    import http.client
+    import statistics
+    import time
+
+    page = b"<p>" + b"word " * words + b"</p>"
+    expect = extract_record("u://rt", page)["extracted_text"]
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=30)
+    times = []
+    try:
+        for _ in range(20):
+            t0 = time.perf_counter()
+            conn.request("POST", "/extract", body=page,
+                         headers={"X-Url": "u://rt"})
+            resp = conn.getresponse()
+            body = resp.read()
+            times.append(time.perf_counter() - t0)
+            assert resp.status == 200
+            assert json.loads(body)["extracted_text"] == expect
+    finally:
+        conn.close()
+    if words > 3:
+        assert len(body) > 64 * 1024
+    assert statistics.median(times) < 0.020, times
+
+
 def test_idle_keep_alive_connection_is_closed(tmp_path):
     # a persistent connection that goes idle must not pin its handler
     # thread forever: the per-connection read timeout closes it

@@ -223,7 +223,8 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
         .distinct())
     contaminated = (
         masked.select(F.col(id_col),
-                      F.explode(_gram_hashes(norm_text(text_col), 8))
+                      F.explode(F.array_distinct(
+                          _gram_hashes(norm_text(text_col), 8)))
                       .alias("gh"))
         .join(bench_grams, "gh", "left_semi")
         .select(id_col).distinct())

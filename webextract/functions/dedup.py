@@ -602,14 +602,20 @@ def near_duplicate_docs(docs: DataFrame, id_col: str = "doc_id",
     pairs are stored stages in a production dedup run, computed once per
     corpus snapshot, not per downstream consumer).
 
-    Two relations here have multiple consumers and are persisted so Spark
-    does not recompute their subtrees per consumer: the candidate pairs
-    (semi-join id set + the verify join) and the per-doc candidate
-    shingle-set relation (sizes + both sides of the common-shingle join —
-    measured ~4x wall on the unfused plan at sf0.1). The cached relation
-    is one compact array row per doc; the exploded forms derive from the
-    cache. Release contract is ``scope``: see
-    :mod:`webextract.functions.cache`.
+    Two relations here have multiple consumers and are materialized with
+    ``localCheckpoint(eager=False)`` so Spark does not recompute their
+    subtrees per consumer: the candidate pairs (semi-join id set + the
+    verify join) and the per-doc candidate shingle-set relation (sizes +
+    both sides of the common-shingle join — measured ~4x wall on the
+    unfused plan at sf0.1). The checkpointed relation is one compact
+    array row per doc; the exploded forms derive from it. Each checkpoint
+    is written on the first action that reads it, replaces its lineage
+    in every later plan, and lives in executor block storage until the
+    ContextCleaner frees it once the returned frame is unreferenced;
+    ``scope.release()`` does not free it, and an executor loss fails the
+    job instead of recomputing. ``scope`` governs only the band relation
+    :func:`lsh_candidate_pairs` persists (see
+    :mod:`webextract.functions.cache`).
     """
     sc = resolve(scope)
     if candidates is not None:

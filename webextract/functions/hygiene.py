@@ -339,8 +339,12 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
     # count (e.g. curate_corpus survivors, whose features computed the
     # identical ``token_count(norm_text(text))``) skip re-normalizing
     # and re-splitting the full text here — the budget never needs the
-    # text itself, only its count
-    n_tok = (F.col(n_tokens_col) if n_tokens_col is not None
+    # text itself, only its count. A NULL count reads as 0, as empty
+    # text does on the text path: left NULL, the doc would report no
+    # count, and at the head of its stratum its running sum would be
+    # NULL and the doc dropped
+    n_tok = (F.coalesce(F.col(n_tokens_col), F.lit(0))
+             if n_tokens_col is not None
              else token_count(norm_text(text_col)))
     base = docs.select(F.col(id_col).alias("id"),
                        F.col(strata_col).alias("stratum"),

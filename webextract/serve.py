@@ -17,6 +17,9 @@ Design mirror of the reference's Flask serving app
   (``flask_app.py:120-130``).
 - ``GET /healthz`` — liveness + config hash (provenance parity with the
   batch path's metrics stamp).
+- **One write per response, TCP_NODELAY on**: status line, headers and
+  body leave in a single socket write, so a keep-alive client never waits
+  ~40 ms on its own delayed ACK (Nagle) between the headers and the body.
 - **Parquet spool**: each response is also appended to an in-memory
   buffer flushed to ``spool_dir`` as parquet every ``flush_every`` docs
   (and on close) — the serving-time analog of the reference writing
@@ -242,6 +245,10 @@ class ExtractServer:
             # forever (slowloris / gone-away clients): a read that
             # stalls this long closes the connection
             timeout = server.idle_timeout
+            # TCP_NODELAY: with Nagle on, the partial last segment of a
+            # response waits for the client's ACK of the previous one,
+            # which a delayed ACK holds back ~40 ms on Linux
+            disable_nagle_algorithm = True
 
             def log_message(self, *a):  # quiet test output
                 pass
@@ -258,7 +265,15 @@ class ExtractServer:
                 if close:
                     self.send_header("Connection", "close")
                     self.close_connection = True
-                self.end_headers()
+                # status line, headers, blank line and body in ONE write
+                # (end_headers() would send the head on its own): a body
+                # in a second small write can wait on the client's
+                # delayed ACK of the head. HTTP/0.9 responses are the
+                # bare body, as end_headers() sends them.
+                if self.request_version != "HTTP/0.9":
+                    self._headers_buffer.append(b"\r\n")
+                    body = b"".join(self._headers_buffer) + body
+                    self._headers_buffer = []
                 self.wfile.write(body)
 
             def do_GET(self) -> None:
