@@ -443,3 +443,61 @@ def test_run_manifest_written_and_reconciles(spark, pages, tmp_path):
                         opts=PipelineOptions(num_partitions=2))
     assert s3["rows_written"] == 0  # resume no-op: manifests don't
     assert spark.read.parquet(out_dir).count() == N  # confuse the anti-join
+
+
+def test_extract_batches_drop_zip_finders(tmp_path):
+    # Python workers are reused and pyspark calls
+    # importlib.invalidate_caches() before each task, which makes every
+    # cached zipimporter re-read its archive; the batch function must
+    # leave none behind, and imports from the zip must keep working
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import pyarrow as pa
+
+    from webextract.config import DEFAULT_CONFIG
+    from webextract.extract import _extract_batch, make_extract_batches
+
+    archive = tmp_path / "probe.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("_zip_probe_a.py", "A = 1\n")
+        zf.writestr("_zip_probe_b.py", "B = 2\n")
+    saved_path = list(sys.path)
+    sys.path.insert(0, str(archive))
+    try:
+        assert importlib.import_module("_zip_probe_a").A == 1
+        assert isinstance(sys.path_importer_cache[str(archive)],
+                          zipimport.zipimporter)
+
+        rows = gen_pages(3, giant_every=0)
+        urls = [r["url"] for r in rows]
+        payloads = [r["html"] for r in rows]
+        batch = pa.RecordBatch.from_pydict(
+            {"url": urls, "html": payloads},
+            pa.schema([("url", pa.string()), ("html", pa.binary())]))
+        fn = make_extract_batches(DEFAULT_CONFIG, "r")
+        (out,) = list(fn(iter([batch])))
+
+        assert not any(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+        assert importlib.import_module("_zip_probe_b").B == 2
+        want = _extract_batch(urls, payloads, DEFAULT_CONFIG, -1, "r")
+        assert out.schema == want.schema
+        timing = out.schema.get_field_index("parse_us")
+        assert [c for i, c in enumerate(out.columns) if i != timing] \
+            == [c for i, c in enumerate(want.columns) if i != timing]
+
+        # closed after the first of two batches: finders still dropped
+        assert isinstance(sys.path_importer_cache[str(archive)],
+                          zipimport.zipimporter)
+        it = fn(iter([batch, batch]))
+        next(it)
+        it.close()
+        assert str(archive) not in sys.path_importer_cache
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.pop(str(archive), None)
+        sys.modules.pop("_zip_probe_a", None)
+        sys.modules.pop("_zip_probe_b", None)

@@ -26,7 +26,7 @@ Layout:
   ``page_xml/xml_converters/xml_converter.py:72-107``).
 - :mod:`webextract.schema`       — Spark StructTypes for every table.
 - :mod:`webextract.pipeline`     — DataFrame wiring: scan → resume anti-join
-  → salted repartition with giant-blob skew routing → ``mapInPandas`` →
+  → salted repartition with giant-blob skew routing → ``mapInArrow`` →
   sink + per-partition lineage/metrics.
 - :mod:`webextract.fixtures`     — deterministic synthetic pages (seed=42).
 - :mod:`webextract.evaluate`     — confusion-matrix / IoU-analog metrics

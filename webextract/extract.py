@@ -13,7 +13,10 @@ binary-payload pipeline the pandas detour costs ~4x on batch conversion.
 
 from __future__ import annotations
 
+import functools
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 from typing import Any
 
@@ -247,10 +250,40 @@ _BLOCK_SCORE_ARROW = pa.schema([
 ])
 
 
+def drops_zip_finders(batch_fn):
+    """Wrap a ``mapInArrow``/``mapInPandas`` batch function so that, when
+    its iterator ends or is closed, every ``zipimport.zipimporter`` is
+    removed from ``sys.path_importer_cache``.
+
+    Python workers are reused, and pyspark calls
+    ``importlib.invalidate_caches()`` before every task. On Python
+    3.10-3.12 that makes each cached zipimporter re-read its whole archive
+    directory (``pyspark.zip``, the spark-core jar, py4j, the shipped
+    package zip): about 0.2 s per task. With no zip finder cached the call
+    costs nothing. A later import gets a fresh finder from the path hook,
+    filled from ``zipimport._zip_directory_cache`` without a re-read; the
+    archives do not change while a worker runs (shipped pyfiles are
+    content-addressed).
+    """
+
+    @functools.wraps(batch_fn)
+    def run(batches):
+        try:
+            yield from batch_fn(batches)
+        finally:
+            cache = sys.path_importer_cache
+            for path, finder in list(cache.items()):
+                if isinstance(finder, zipimport.zipimporter):
+                    del cache[path]
+
+    return run
+
+
 def make_block_score_batches(cfg: ExtractConfig):
     """``mapInArrow`` function for the per-block debug sink: one output
     row per (url, block), matching ``BLOCK_SCORES_SCHEMA``."""
 
+    @drops_zip_finders
     def score_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
@@ -276,8 +309,12 @@ def make_extract_batches(cfg: ExtractConfig, run_id: str,
     ``EXTRACTED_SCHEMA`` rows. ``passthrough`` columns are copied from the
     input batch to the output 1:1 (zero-copy Arrow column reuse) — used by
     the streaming path to keep ``warc_ts`` without a stream-stream join.
+    The function drops the worker's cached zip import finders when it
+    ends, so the next task's import-cache reset does not re-read
+    ``pyspark.zip`` and the spark-core jar (see ``drops_zip_finders``).
     """
 
+    @drops_zip_finders
     def extract_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:

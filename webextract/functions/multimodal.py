@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from ..extract import drops_zip_finders
+
 MEDIA_FEATURES_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
     StructField("kind", StringType(), True),
@@ -848,6 +850,7 @@ def make_media_batches(backend: str = "fake"):
     per-row, never raised (same totality contract as the extractor)."""
     decode = _fake_decode if backend == "fake" else _real_decode
 
+    @drops_zip_finders
     def media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             rows = []
@@ -942,6 +945,7 @@ def media_transform(media: DataFrame, op: str,
     def clamp(x: int) -> int:
         return max(1, min(int(x), 8192))
 
+    @drops_zip_finders
     def transform_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math
 
@@ -1059,6 +1063,7 @@ def pdf_media_table(pdfs: DataFrame, id_col: str = "doc_id",
         # collide doc N's image 64 with doc N+1's image 0
         raise ValueError("max_images_per_doc must be in 1..64")
 
+    @drops_zip_finders
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from webextract.pdf_extract import pdf_images
 

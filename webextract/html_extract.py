@@ -41,6 +41,7 @@ import codecs
 import hashlib
 import re
 from dataclasses import dataclass
+from html import unescape as _html_unescape
 from html.parser import HTMLParser
 from typing import NamedTuple
 
@@ -508,15 +509,6 @@ def tokenize_blocks(html_text: str) -> list[Block]:
                                 len(text) - text.count(" "),
                                 cur_link_nws, text))
     return blocks
-
-
-from html import unescape as _html_unescape  # noqa: E402 (hot-path import)
-
-
-def _unescape(data: str) -> str:
-    if "&" in data:
-        return _html_unescape(data)
-    return data
 
 
 # ---------------------------------------------------------------------------

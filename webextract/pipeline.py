@@ -1,5 +1,5 @@
 """DataFrame wiring: scan → resume anti-join → salted repartition with
-giant-blob skew routing → ``mapInPandas`` extraction → sink + per-partition
+giant-blob skew routing → ``mapInArrow`` extraction → sink + per-partition
 lineage/metrics.
 
 This is the Spark lifecycle of the reference's flagship entry point
@@ -19,12 +19,17 @@ This is the Spark lifecycle of the reference's flagship entry point
 - provenance stamp (``core/setup.py:102-105``)        → run_id + git hash +
   config hash in a per-partition metrics table
 
-Scale notes (100 TB design point): the hot path is scan → exchange →
-Python runner → write; exactly one shuffle (the explicit repartition that
-re-balances raw WARC-sized input splits and isolates skew). The resume
-anti-join broadcasts nothing by default — at 10^12 committed urls it is a
-shuffle join on the url key, which Catalyst plans as sort-merge; AQE
-handles post-shuffle sizing. Metrics derive from the *committed* output
+Scale notes (100 TB design point): ``extract_dataframe`` is scan →
+exchange → Python runner → write, with one shuffle: the salted
+repartition that re-balances raw WARC-sized input splits and isolates
+skew (``scan_mode="dual"`` scans twice and adds a round-robin exchange
+for the giants). ``run_extraction`` puts ``plan_todo`` in front, so the
+html column crosses two exchanges: the url-keyed one of
+``dropDuplicates``, then the salted one. The resume anti-join is a
+broadcast join only while the committed url set is small; at 10^12
+committed urls it is a shuffle join on the url key, which Catalyst plans
+as sort-merge and which reuses the url exchange; AQE handles
+post-shuffle sizing. Metrics derive from the *committed* output
 (column-pruned read-back of 5 int columns), so metrics and data can never
 disagree after a partial failure.
 """

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .extract import drops_zip_finders
+
 WARC_SCHEMA = StructType([
     StructField("url", StringType(), True),
     StructField("warc_ts", TimestampType(), True),
@@ -185,6 +187,7 @@ def _make_parse_batches(max_bytes: int,
     contract, same rows, either execution mode."""
     rtypes = tuple(record_types)
 
+    @drops_zip_finders
     def parse_batches(batches):
         for batch in batches:
             rows: list[dict] = []
