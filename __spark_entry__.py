@@ -774,7 +774,7 @@ def q_curate_full(spark, sf_dir, budget_mode: str = "exact"):
     # first) — every stage is the already-oracle-checked primitive,
     # composed (see functions/curate.py:curate_full). budget_mode=
     # "approx" runs the two-phase budget scale path (identical rows,
-    # same oracle); bench.py times both variants.
+    # same oracle); perfbench's curate_chains workload times both.
     from webextract.functions.curate import curate_full
     from webextract.functions.text import norm_text
 
@@ -939,48 +939,20 @@ def q_extract_fixture_pages(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Warm the process-wide memoized feature expression tree
-    # (text._FEATURE_CACHE, round 6) while the registry is constructed:
-    # ~10 registered queries share it, and its one-time Column
-    # construction (~1-2 s of driver-side py4j round-trips) otherwise
-    # lands inside whichever feature query a consumer happens to build
-    # first — registry construction is where a long-lived service
-    # builds shared plan state. No-op without a live gateway (the
-    # build needs the JVM) and on every later call.
-    try:
-        from webextract.functions.text import (
-            _build_text_feature_stages, _memoized_stages,
-        )
-
-        _memoized_stages("text_features", _build_text_feature_stages)
-    except Exception:
-        pass
-    # Registry order rotates so that every key gets an external driver
-    # CORRECTNESS row at least every two rounds (the round-7 verdict's
-    # rotation ask): the driver run records ~50 rows of the 54-key
-    # registry from the head, so the four keys without a round-7 row
-    # (minhash_wide / lsh_candidates_wide / top_longest_docs /
-    # token_budget) LEAD this round, and four keys green in BOTH r06 and
-    # r07 (resume_todo / dup_url_check / events_iou /
-    # near_dup_embeddings) rotate to the tail. The FULL registry is
-    # still value-checked against DuckDB every round by
-    # tests/test_oracle_parity.py. See BENCH.md.
     return {
-        "minhash_wide": q_minhash_wide,
-        "lsh_candidates_wide": q_lsh_candidates_wide,
-        "top_longest_docs": q_top_longest_docs,
-        "token_budget": q_token_budget,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "extract_fixture_pages": q_extract_fixture_pages,
         "extract_text": q_extract_text,
         "extract_spans": q_extract_spans,
         "extract_line_spans": q_extract_line_spans,
         "extract_stats": q_extract_stats,
         "mean_confidence": q_mean_confidence,
+        "resume_todo": q_resume_todo,
+        "extract_fixture_pages": q_extract_fixture_pages,
         "dedup_exact": q_dedup_exact,
+        "dup_url_check": q_dup_url_check,
         "minhash_signatures": q_minhash_signatures,
         "lsh_candidates": q_lsh_candidates,
+        "minhash_wide": q_minhash_wide,
+        "lsh_candidates_wide": q_lsh_candidates_wide,
         "simhash": q_simhash,
         "jaccard_pairs": q_jaccard_pairs,
         "near_dup_docs": q_near_dup_docs,
@@ -988,7 +960,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_increment": q_dedup_increment,
         "paragraph_dedup": q_paragraph_dedup,
         "knn_cosine": q_knn_cosine,
+        "near_dup_embeddings": q_near_dup_embeddings,
         "near_dup_embeddings_lsh": q_near_dup_embeddings_lsh,
+        "ann_lsh_topk": q_ann_lsh_topk,
+        "ann_ivf_topk": q_ann_ivf_topk,
         "token_stats": q_token_stats,
         "winnow_fingerprints": q_winnow_fingerprints,
         "lang_id": q_lang_id,
@@ -998,14 +973,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_scores_multilang": q_quality_scores_multilang,
         "quality_scores_scripts": q_quality_scores_scripts,
         "token_counts_by_source": q_token_counts_by_source,
+        "top_longest_docs": q_top_longest_docs,
         "pii_mask": q_pii_mask,
         "decontaminate": q_decontaminate,
         "domain_stats": q_domain_stats,
         "canonical_urls": q_canonical_urls,
         "lm_familiarity": q_lm_familiarity,
+        "token_budget": q_token_budget,
         "token_budget_approx": q_token_budget_approx,
         "stratified_sample": q_stratified_sample,
         "events_confusion": q_events_confusion,
+        "events_iou": q_events_iou,
         "events_windowed": q_events_windowed,
         "curated_docs": q_curated_docs,
         "curated_docs_transitive": q_curated_docs_transitive,
@@ -1016,15 +994,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_frame_sample": q_media_frame_sample,
         "media_pcm_sample": q_media_pcm_sample,
         "pdf_media_features": q_pdf_media_features,
-        # rotation tail (see the note above): four keys with GREEN
-        # driver rows in BOTH r06 and r07 sit past the ~50-row cap this
-        # round so the four previously-unchecked keys lead — all still
-        # value-checked locally every round by
-        # tests/test_oracle_parity.py over the FULL registry
-        "resume_todo": q_resume_todo,
-        "dup_url_check": q_dup_url_check,
-        "events_iou": q_events_iou,
-        "near_dup_embeddings": q_near_dup_embeddings,
     }
 
 

@@ -263,10 +263,10 @@ def test_pdf_unsupported_filter_and_predictor_skip_keep_rest():
 def test_pdf_images_extracts_embedded_jpeg():
     import base64
 
+    from webextract.fixtures import make_jpeg_stub
     from webextract.pdf_extract import pdf_images
-    from test_jpeg import encode_jpeg
 
-    jpg = encode_jpeg(8, 8, bytes([120, 60, 200]) * 64, nch=3)
+    jpg = make_jpeg_stub(8, 8, fill=b"embedded photo")
     direct = _pdf_stream_obj(jpg, b" /Subtype /Image /Filter /DCTDecode")
     assert pdf_images(direct) == [jpg]
     # DCT behind an ASCII85 transport wrapper: wrapper peeled
@@ -276,11 +276,10 @@ def test_pdf_images_extracts_embedded_jpeg():
     assert pdf_images(wrapped) == [jpg]
     # the image stream must not leak into the text scan
     assert extract_pdf("u", direct).text == ""
-    # and the decoded bytes feed the media JPEG decoder
-    from webextract.functions.jpeg import jpeg_pixels
+    # and the extracted bytes feed the media JPEG header parser
+    from webextract.functions.multimodal import _jpeg_dims
 
-    w, h, nch, _pix = jpeg_pixels(pdf_images(direct)[0])
-    assert (w, h, nch) == (8, 8, 3)
+    assert _jpeg_dims(pdf_images(direct)[0]) == (8, 8, None)
 
 
 def test_pdf_flate_bomb_bounded():

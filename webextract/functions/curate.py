@@ -130,7 +130,7 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
         # cluster-consistent drop: exactly one survivor (the min id) per
         # connected component of verified pairs — a chain a~b~c keeps
         # only a, even though (a,c) never verified directly
-        groups = duplicate_groups(pairs, scope=sc)
+        groups = duplicate_groups(pairs)
         drops = (groups.filter(F.col("doc_id") != F.col("group_id"))
                  .select(F.col("doc_id").alias(id_col)))
     else:
@@ -258,4 +258,4 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
     return token_budget_sample(
         enriched, budget_tokens=budget_tokens, strata_col=strata_col,
         priority_col="quality_score", id_col=id_col, text_col=text_col,
-        mode=budget_mode, n_tokens_col="n_tokens", scope=sc)
+        mode=budget_mode, n_tokens_col="n_tokens")

@@ -267,8 +267,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def duplicate_groups(pairs: DataFrame, max_iter: int = 25,
-                     scope: CacheScope | None = None) -> DataFrame:
+def duplicate_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Transitive duplicate grouping: connected components over verified
     near-dup pairs → (doc_id, group_id), group_id = MIN doc id in the
     component (the canonical representative, same keep-lowest convention
@@ -302,10 +301,9 @@ def duplicate_groups(pairs: DataFrame, max_iter: int = 25,
     # full logical plan — here the whole verify pipeline — into EVERY
     # round's analysis, making driver-side planning the dominant
     # per-round cost; truncating the lineage keeps round plans constant-
-    # size. ``scope`` is accepted for API consistency but the loop state
-    # needs no release path: checkpointed RDDs are dropped by the
-    # ContextCleaner as soon as the previous round's frame is
-    # unreferenced.
+    # size. The loop state needs no release path: checkpointed RDDs are
+    # dropped by the ContextCleaner as soon as the previous round's frame
+    # is unreferenced.
     edges = (
         fwd.unionByName(fwd.select(F.col("dst").alias("src"),
                                    F.col("src").alias("dst"))).distinct()

@@ -289,8 +289,7 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
                         text_col: str = "text",
                         mode: str = "exact",
                         buckets: int = 32,
-                        n_tokens_col: str | None = None,
-                        scope=None) -> DataFrame:
+                        n_tokens_col: str | None = None) -> DataFrame:
     """Budgeted mixture fill: keep documents per stratum in priority
     order until the stratum's cumulative token count would exceed
     ``budget_tokens`` — how a training-mix recipe ("15B tokens of
@@ -323,10 +322,10 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
     the histogram join gives them no bucket).
 
     In approx mode the projected base relation (id, stratum, priority,
-    n_tokens — 4 narrow columns) is materialized via ``scope``
-    (:mod:`webextract.functions.cache`): the two-phase plan consumes it
-    THREE times (edge sketch, bucket join, histogram), and without the
-    persist each reference re-executes the whole upstream producer —
+    n_tokens — 4 narrow columns) is materialized with
+    ``localCheckpoint``: the two-phase plan consumes it THREE times
+    (edge sketch, bucket join, histogram), and without it each
+    reference re-executes the whole upstream producer —
     measured 2.4× wall on the composed ``curate_full`` chain, where the
     producer is the near-dup survivor join. At 10^12 docs this
     projection is the stored stage table a budget recipe reads anyway.
@@ -359,9 +358,8 @@ def token_budget_sample(docs: DataFrame, budget_tokens: int,
         # per reference (measured 1.9 MB of physical-plan text). The
         # checkpoint makes each reference a constant-size leaf; at
         # 10^12 docs this projection is the stored stage table a
-        # budget recipe reads anyway. (``scope`` stays in the signature
-        # for API stability; checkpoint blocks are released by the
-        # ContextCleaner when the frame is unreferenced.)
+        # budget recipe reads anyway. Checkpoint blocks are released by
+        # the ContextCleaner when the frame is unreferenced.
         base = base.localCheckpoint(eager=False)
         prio = F.col(priority_col)
         qs = [i / buckets for i in range(1, buckets)]

@@ -6,26 +6,19 @@ never exceptions):
 
 - ``backend="fake"`` (default): deterministic pseudo-features derived from
   the payload's md5 — reproducible anywhere, oracle-checkable in SQL.
-- ``backend="real"``: pure-Python container parsing — PNG IHDR, GIF
-  logical screen + frame walk, JPEG SOFn scan, BMP info header, RIFF
-  containers (WAVE fmt/data chunk walk → sample rate / PCM frame count /
-  duration; AVI avih header → dims, frame count, duration) — plus a
-  pure-Python PIXEL stage: PNG (IDAT zlib inflate → scanline unfilter →
-  palette expand), BMP (raw 24/32-bpp), GIF (pure-Python GIF-LZW →
-  deinterlace → palette → canvas composite; first frame) and JPEG —
-  baseline AND progressive (:mod:`webextract.functions.jpeg`: Huffman
-  entropy decode, SOF2 multi-scan spectral/successive-approximation
-  accumulation, 8×8 IDCT, YCbCr→RGB) — decode to pixels and resample
-  nearest-neighbor; GIF frame-sampling counts real frames from the
-  block walk.
+- ``backend="real"``: pure-Python container HEADER parsing — PNG IHDR,
+  GIF logical screen + frame walk, JPEG SOFn scan, BMP info header,
+  TIFF IFD, WebP/AVIF/MP4/MP3, RIFF containers (WAVE fmt/data chunk
+  walk → sample rate / PCM frame count / duration; AVI avih header →
+  dims, frame count, duration). GIF frame sampling counts real frames
+  from the block walk, and ``pcm_sample`` strides the real PCM frames.
 
-Codec-speed seam: the pure-Python pixel decoders are deterministic and
-dependency-free but ~100× slower than native codecs (libjpeg-turbo,
-libpng). Production installs a native decoder via the ``decoder=``
-hook on :func:`media_transform` — any callable
-``payload -> (width, height, channels, raw_pixel_bytes)`` (e.g. a PIL
-wrapper) — while the pure-Python path stays the reproducible oracle
-fallback. This mirrors how the reference isolates its decode stage
+Pixel decode is not done here: real-backend ``resize`` needs a codec
+passed through the ``decoder=`` hook on :func:`media_transform` — any
+callable ``payload -> (width, height, channels, raw_pixel_bytes)``
+(e.g. a PIL wrapper) — whose pixels are resampled nearest-neighbor.
+Without one, each row reports an error naming the hook. This mirrors
+how the reference isolates its decode stage
 (``utils/image_utils.py:84-168``) behind a skippable boundary.
 """
 
@@ -132,10 +125,6 @@ def _gif_dims(b: bytes) -> tuple[int, int, int | None]:
             raise ValueError(f"bad GIF block 0x{block:02x}")
     return w, h, max(frames, 1)
 
-
-# decoded-pixel budget for untrusted payloads: PNG/GIF declared dims are
-# rejected above this BEFORE any inflate work (bomb guard)
-_MAX_PIXEL_BYTES = 64 << 20
 
 # SOF0..SOF15 carry frame dimensions, except DHT/JPG/DAC which reuse
 # the 0xC4/0xC8/0xCC slots
@@ -545,117 +534,6 @@ def _real_decode(payload: bytes, kind: str) -> dict:
     raise ValueError("unsupported media container (no known magic bytes)")
 
 
-def _png_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """Full PNG pixel decode with stdlib zlib: chunk walk → IDAT inflate →
-    per-scanline unfilter (None/Sub/Up/Average/Paeth) → palette expansion.
-    Supports bit depth 8, color types 0/2/3/4/6, non-interlaced — the
-    overwhelming majority of web PNGs. Returns (w, h, channels, raw)."""
-    import zlib
-
-    pos = 8
-    idat = bytearray()
-    plte = b""
-    w = h = None
-    bit_depth = color_type = interlace = 0
-    while pos + 8 <= len(b):
-        (length,) = struct.unpack_from(">I", b, pos)
-        ctype = b[pos + 4:pos + 8]
-        data = b[pos + 8:pos + 8 + length]
-        if ctype == b"IHDR":
-            w, h, bit_depth, color_type, _comp, _filt, interlace = \
-                struct.unpack_from(">IIBBBBB", data, 0)
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if w is None:
-        raise ValueError("PNG without IHDR")
-    if bit_depth != 8:
-        raise ValueError(f"unsupported PNG bit depth {bit_depth}")
-    if interlace:
-        raise ValueError("interlaced (Adam7) PNG unsupported")
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    # decompression-bomb guard (untrusted crawl data): reject oversized
-    # declared dims BEFORE inflating, and inflate with an output bound —
-    # a crafted IHDR + ~1000:1 deflate stream must not balloon executor
-    # memory past the decoded-size budget (same cap as the GIF path)
-    if w * h * nch > _MAX_PIXEL_BYTES:
-        raise ValueError("PNG dimensions exceed pixel budget")
-    stride = w * nch
-    want = h * (stride + 1)
-    d = zlib.decompressobj()
-    raw = d.decompress(bytes(idat), want)
-    if len(raw) < want:
-        raise ValueError("truncated PNG pixel data")
-    out = bytearray()
-    prev = bytearray(stride)
-    rp = 0
-    for _y in range(h):
-        f = raw[rp]
-        line = bytearray(raw[rp + 1:rp + 1 + stride])
-        rp += 1 + stride
-        if f == 1:  # Sub
-            for i in range(nch, stride):
-                line[i] = (line[i] + line[i - nch]) & 0xFF
-        elif f == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif f == 3:  # Average
-            for i in range(stride):
-                a = line[i - nch] if i >= nch else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif f == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - nch] if i >= nch else 0
-                c = prev[i - nch] if i >= nch else 0
-                up = prev[i]
-                p = a + up - c
-                pa, pb, pc = abs(p - a), abs(p - up), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else \
-                    (up if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-        elif f != 0:
-            raise ValueError(f"bad PNG filter type {f}")
-        out += line
-        prev = line
-    if color_type == 3:  # palette → RGB
-        if not plte:
-            raise ValueError("paletted PNG without PLTE")
-        px = bytearray()
-        for v in out:
-            px += plte[3 * v:3 * v + 3]
-        out, nch = px, 3
-    return w, h, nch, bytes(out)
-
-
-def _bmp_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """Uncompressed 24/32-bpp BMP pixel decode: row de-padding +
-    bottom-up flip. Returns (w, h, channels, raw)."""
-    (data_off,) = struct.unpack_from("<I", b, 10)
-    (hdr_size,) = struct.unpack_from("<I", b, 14)
-    if hdr_size < 40:
-        raise ValueError("unsupported BMP header (core header)")
-    w, h = struct.unpack_from("<ii", b, 18)
-    _planes, bpp = struct.unpack_from("<HH", b, 26)
-    (comp,) = struct.unpack_from("<I", b, 30)
-    if comp != 0 or bpp not in (24, 32):
-        raise ValueError(f"unsupported BMP (compression={comp}, bpp={bpp})")
-    top_down, h = h < 0, abs(h)
-    nch = bpp // 8
-    stride = ((w * nch + 3) // 4) * 4
-    if len(b) < data_off + h * stride:
-        raise ValueError("truncated BMP pixel data")
-    out = bytearray()
-    for row in range(h):
-        y = row if top_down else h - 1 - row
-        start = data_off + y * stride
-        out += b[start:start + w * nch]
-    return w, h, nch, bytes(out)
-
-
 def _nn_resize(pix: bytes, w: int, h: int, nch: int,
                tw: int, th: int) -> bytes:
     """Nearest-neighbor resample (vectorized numpy fancy-indexing)."""
@@ -665,183 +543,6 @@ def _nn_resize(pix: bytes, w: int, h: int, nch: int,
     ys = (np.arange(th, dtype=np.int64) * h) // th
     xs = (np.arange(tw, dtype=np.int64) * w) // tw
     return arr[ys][:, xs].tobytes()
-
-
-def _gif_lzw(min_code: int, data: bytes, npix: int) -> bytes:
-    """GIF-flavor LZW decode (GIF89a spec, appendix F): variable code
-    width starting at min_code+1 bits, clear/end codes, width bump when
-    the next table slot reaches 2^width (capped at 12 bits). Returns
-    exactly ``npix`` color indices."""
-    if not 2 <= min_code <= 11:
-        raise ValueError(f"bad LZW minimum code size {min_code}")
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    base = [bytes([i]) for i in range(clear)]
-    table: list[bytes] = []
-    code_size = min_code + 1
-    prev: bytes | None = None
-    out = bytearray()
-    acc = bits = 0
-    for byte in data:
-        acc |= byte << bits
-        bits += 8
-        while bits >= code_size:
-            code = acc & ((1 << code_size) - 1)
-            acc >>= code_size
-            bits -= code_size
-            if code == clear:
-                table = []
-                code_size = min_code + 1
-                prev = None
-                continue
-            if code == end:
-                if len(out) < npix:
-                    raise ValueError("LZW stream ended short")
-                return bytes(out[:npix])
-            next_code = end + 1 + len(table)
-            if code < clear:
-                entry = base[code]
-            elif code < next_code:
-                entry = table[code - end - 1]
-            elif code == next_code and prev is not None:
-                entry = prev + prev[:1]
-            else:
-                raise ValueError(f"bad LZW code {code}")
-            if prev is not None and next_code < 4096:
-                # the new entry is prev + first byte of entry — when
-                # code == next_code this IS entry (already formed above)
-                table.append(prev + entry[:1])
-                if end + 2 + len(table) - 1 == (1 << code_size) \
-                        and code_size < 12:
-                    code_size += 1
-            out += entry
-            if len(out) >= npix:
-                return bytes(out[:npix])
-            prev = entry
-    raise ValueError("LZW stream ended short")
-
-
-def _gif_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    """First-frame GIF pixel decode: block walk → LZW inflate →
-    (de)interlace → palette mapping → canvas composite. Animated GIFs
-    yield frame 1 (the resize contract for stills; frame SAMPLING uses
-    the frame walk).
-
-    Canvas-accurate: a first frame that is a sub-rectangle of the
-    logical screen (common in optimized animated GIFs) is composited
-    onto a logical-screen-sized canvas at its descriptor left/top,
-    with the background color filling the rest and GCE-transparent
-    pixels leaving the background visible — so the decode matches what
-    a viewer shows, not just the frame rect."""
-    if len(b) < 13:
-        raise ValueError("truncated GIF header")
-    ls_w, ls_h = struct.unpack_from("<HH", b, 6)
-    packed, bg_index = b[10], b[11]
-    pos = 13
-    gct = b""
-    if packed & 0x80:
-        n = 3 * (2 << (packed & 0x07))
-        gct = b[pos:pos + n]
-        pos += n
-    transparent = None  # GCE transparent color index for the next frame
-    while pos < len(b):
-        block = b[pos]
-        if block == 0x3B:
-            break
-        if block == 0x21:  # extension: label + sub-blocks
-            label = b[pos + 1] if pos + 1 < len(b) else 0
-            body = bytearray()
-            pos += 2
-            while pos < len(b) and b[pos] != 0:
-                body += b[pos + 1:pos + 1 + b[pos]]
-                pos += 1 + b[pos]
-            pos += 1
-            if label == 0xF9 and len(body) >= 4 and body[0] & 0x01:
-                transparent = body[3]  # graphic control: transparency on
-        elif block == 0x2C:  # image descriptor — decode THIS frame
-            if pos + 10 > len(b):
-                raise ValueError("truncated GIF image descriptor")
-            fx, fy, fw, fh = struct.unpack_from("<HHHH", b, pos + 1)
-            local = b[pos + 9]
-            pos += 10
-            lct = b""
-            if local & 0x80:
-                n = 3 * (2 << (local & 0x07))
-                lct = b[pos:pos + n]
-                pos += n
-            palette = lct or gct
-            if not palette:
-                raise ValueError("GIF frame without a color table")
-            # byte budget, not pixel count: the canvas/frame buffers are
-            # 3 bytes/px RGB (same accounting as the PNG w*h*nch guard)
-            if 3 * fw * fh > _MAX_PIXEL_BYTES \
-                    or 3 * ls_w * ls_h > _MAX_PIXEL_BYTES:
-                raise ValueError("GIF frame too large")
-            min_code = b[pos]
-            pos += 1
-            stream = bytearray()
-            while pos < len(b) and b[pos] != 0:
-                stream += b[pos + 1:pos + 1 + b[pos]]
-                pos += 1 + b[pos]
-            idxs = _gif_lzw(min_code, bytes(stream), fw * fh)
-            if local & 0x40:  # interlaced: 4-pass row order
-                rows = [idxs[r * fw:(r + 1) * fw] for r in range(fh)]
-                order = [*range(0, fh, 8), *range(4, fh, 8),
-                         *range(2, fh, 4), *range(1, fh, 2)]
-                deinter: list[bytes] = [b""] * fh
-                for src_row, dst_y in enumerate(order):
-                    deinter[dst_y] = rows[src_row]
-                idxs = b"".join(deinter)
-            n_colors = len(palette) // 3
-            full = (fx == 0 and fy == 0 and fw == ls_w and fh == ls_h
-                    and transparent is None)
-            if full:
-                # fast path: the frame IS the canvas, map palette directly
-                px = bytearray()
-                for v in idxs:
-                    if v >= n_colors:
-                        raise ValueError("GIF index outside color table")
-                    px += palette[3 * v:3 * v + 3]
-                return fw, fh, 3, bytes(px)
-            # composite onto the logical screen: background color fill
-            # (GCT at the header's background index; black without a GCT),
-            # frame pasted at (left, top), transparent indices skipped
-            if fx + fw > ls_w or fy + fh > ls_h:
-                raise ValueError("GIF frame outside logical screen")
-            bg = (gct[3 * bg_index:3 * bg_index + 3]
-                  if gct and 3 * bg_index + 3 <= len(gct) else b"\x00\x00\x00")
-            canvas = bytearray(bg * (ls_w * ls_h))
-            for row in range(fh):
-                dst = 3 * ((fy + row) * ls_w + fx)
-                src = row * fw
-                for col in range(fw):
-                    v = idxs[src + col]
-                    if v == transparent:
-                        continue
-                    if v >= n_colors:
-                        raise ValueError("GIF index outside color table")
-                    canvas[dst + 3 * col:dst + 3 * col + 3] = \
-                        palette[3 * v:3 * v + 3]
-            return ls_w, ls_h, 3, bytes(canvas)
-        else:
-            raise ValueError(f"bad GIF block 0x{block:02x}")
-    raise ValueError("GIF without an image descriptor")
-
-
-def _jpeg_pixels(b: bytes) -> tuple[int, int, int, bytes]:
-    from .jpeg import jpeg_pixels
-
-    return jpeg_pixels(b)
-
-
-# containers with a pure-Python pixel-decode path (zlib / raw / LZW /
-# from-spec baseline-JPEG Huffman+IDCT)
-_PIXEL_DECODERS = (
-    (b"\x89PNG\r\n\x1a\n", _png_pixels),
-    (b"BM", _bmp_pixels),
-    (b"GIF87a", _gif_pixels),
-    (b"GIF89a", _gif_pixels),
-    (b"\xff\xd8", _jpeg_pixels),
-)
 
 
 def make_media_batches(backend: str = "fake"):
@@ -911,20 +612,18 @@ def media_transform(media: DataFrame, op: str,
     ``ceil(n/frame_every)``, and the content digest is
     ``md5(src_digest || ':' || op spec)`` — deterministic and exactly
     SQL-mirrorable, so the batching/partitioning/schema plumbing is
-    oracle-checked end to end. ``backend="real"`` decodes actual pixels
-    for PNG/BMP/GIF/JPEG (zlib inflate + unfilter / raw rows /
-    pure-Python GIF-LZW with canvas composite / from-spec Huffman+IDCT
-    incl. progressive SOF2, first frame) and resamples nearest-neighbor
-    — the digest is the md5 of the resized raw pixel bytes;
-    ``frame_sample`` uses the real GIF frame walk. Containers outside
-    that set surface as per-row errors, with the Spark-side plumbing
+    oracle-checked end to end. ``backend="real"`` parses the container
+    header (unknown containers are per-row errors); ``frame_sample``
+    uses the real GIF frame walk, with the Spark-side plumbing
     identical between backends.
 
-    ``decoder``: optional callable ``payload -> (w, h, channels,
-    raw_pixels)`` replacing the pure-Python pixel stage — the
-    production seam for native codecs (PIL / libjpeg-turbo are ~100×
-    faster than the from-spec Python decoders). Its exceptions follow
-    the same per-row error contract. Ignored by the fake backend.
+    ``decoder``: callable ``payload -> (w, h, channels, raw_pixels)``,
+    the seam for a native codec (e.g. PIL / libjpeg-turbo). Real-backend
+    ``resize`` decodes through it and resamples nearest-neighbor — the
+    digest is the md5 of the resized raw pixel bytes; without a
+    ``decoder`` every resize row is an error that names this hook. Its
+    exceptions follow the same per-row error contract. Ignored by the
+    fake backend.
     """
     if op == "resize":
         if not width or not height:
@@ -964,19 +663,14 @@ def media_transform(media: DataFrame, op: str,
                         pb = bytes(payload)
                         src = decode(pb, kind)
                         if backend != "fake" and op == "resize":
-                            # real pixel stage: decode + nearest-neighbor
-                            # resample; digest is the md5 of the RESIZED
-                            # raw pixels. An injected ``decoder`` (native
-                            # codec) takes precedence over the
-                            # pure-Python per-container decoders.
-                            dec = decoder or next(
-                                (d for m, d in _PIXEL_DECODERS
-                                 if pb.startswith(m)), None)
-                            if dec is None:
+                            # real pixel stage: the injected ``decoder``
+                            # (native codec) + nearest-neighbor resample;
+                            # digest is the md5 of the RESIZED raw pixels
+                            if decoder is None:
                                 raise NotImplementedError(
-                                    "no pixel decoder for this container"
-                                    " — install one via decoder=")
-                            w0, h0, nch, pix = dec(pb)
+                                    "real-backend resize decodes pixels"
+                                    " only through a codec: pass decoder=")
+                            w0, h0, nch, pix = decoder(pb)
                             tw, th = clamp(width), clamp(height)
                             row["width"], row["height"] = tw, th
                             row["n_frames"] = src["n_frames"]

@@ -35,8 +35,7 @@ _HEADER_MIN_PT = 14.0
 
 # decoded-stream output cap: crawled PDFs are untrusted, and Flate/LZW can
 # expand ~1000x — bound what one stream may inflate to so a crafted bomb
-# can't blow executor memory (same contract as _MAX_PIXEL_BYTES in
-# functions/multimodal.py)
+# can't blow executor memory
 _MAX_STREAM_BYTES = 1 << 26  # 64 MiB
 
 _STREAM_START_RE = re.compile(rb"stream\r?\n")
@@ -348,9 +347,10 @@ def pdf_images(payload: bytes) -> list[bytes]:
     The crawl-pipeline shape: PDFs carry their photos as ``/DCTDecode``
     XObject streams whose bytes ARE a JPEG file, optionally wrapped in an
     ASCII transport filter — peel the wrapper and hand the JPEG to the
-    media path (``functions.multimodal.media_features`` /
-    ``functions.jpeg.jpeg_pixels``). Non-DCT image streams (raw, CCITT,
-    JPX) are out of scope here; corrupt wrappers are skipped."""
+    media path (``functions.multimodal.media_features``, which reads its
+    SOF header; pixels go through ``media_transform``'s ``decoder=``).
+    Non-DCT image streams (raw, CCITT, JPX) are out of scope here;
+    corrupt wrappers are skipped."""
     out: list[bytes] = []
     for head, body in _iter_streams(payload):
         chain = _filter_chain(head)

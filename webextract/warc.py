@@ -15,7 +15,7 @@ crawl; individual files are never split — gzip members are not seekable
 without an index), record parsing inside ``mapInPandas`` so bytes flow
 through Arrow once. Per-file decompression is BOUNDED (``max_bytes``)
 before any allocation growth: a crafted 1000:1 deflate bomb cannot
-balloon an executor (same stance as the PNG/GIF pixel guards).
+balloon an executor (same stance as the PDF stream cap).
 
 Scope: WARC/1.0 and 1.1; ``response`` records carrying HTTP payloads
 (status line + headers stripped, body kept raw for the pipeline's own
