@@ -6,6 +6,14 @@ engine (no Spark needed for serving itself)."""
 from __future__ import annotations
 
 import json
+import os
+import pathlib
+import socket
+import statistics
+import subprocess
+import sys
+import threading
+import time
 import urllib.request
 import urllib.error
 
@@ -68,7 +76,7 @@ def test_admission_control_rejects_when_full(tmp_path):
     srv.start()
     try:
         # hold the only admission slot, then a request must get 429
-        assert srv._admission.acquire(blocking=False)
+        assert srv._admission.acquire(block=False)
         req = urllib.request.Request(
             f"http://127.0.0.1:{srv.port}/extract", data=b"<p>x</p>",
             headers={"X-Url": "u"}, method="POST")
@@ -311,3 +319,205 @@ def test_idle_keep_alive_connection_is_closed(tmp_path):
         conn.close()
     finally:
         srv.close()
+
+
+# -- one worker per core ------------------------------------------------------
+
+multi_core = pytest.mark.skipif(
+    len(getattr(os, "sched_getaffinity", lambda _: ())(0)) < 2,
+    reason="the worker model needs at least two cores")
+
+
+def _children(pid: int) -> set[int]:
+    """Live child pids of ``pid`` (zombies awaiting their reaper count
+    as gone)."""
+    kids = set()
+    for task in pathlib.Path(f"/proc/{pid}/task").glob("*"):
+        try:
+            kids.update(map(int, (task / "children").read_text().split()))
+        except OSError:
+            pass
+    return {k for k in kids if not _gone(k)}
+
+
+def _gone(pid: int) -> bool:
+    try:
+        stat = pathlib.Path(f"/proc/{pid}/stat").read_text()
+    except OSError:
+        return True
+    return stat.rsplit(")", 1)[1].split()[0] == "Z"
+
+
+def _port_free(port: int) -> bool:
+    # SO_REUSEADDR, as a restarted server binds: TIME_WAIT leftovers of
+    # served connections do not block it, a listener still open does
+    with socket.socket() as s:
+        s.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        try:
+            s.bind(("127.0.0.1", port))
+        except OSError:
+            return False
+        return True
+
+
+def _post_each(port: int, n: int, page: bytes) -> list[tuple[int, dict]]:
+    # n requests, each on a fresh connection, from twice as many client
+    # threads as there are workers
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(2 * len(os.sched_getaffinity(0))) as pool:
+        futs = [pool.submit(_post, port, f"u://each/{i}", page)
+                for i in range(n)]
+        return [f.result(timeout=60) for f in futs]
+
+
+@multi_core
+def test_workers_extract_concurrently():
+    # a page that takes >= 200 ms to extract and answers in a few hundred
+    # bytes (the links are boilerplate): one process would run two of
+    # them back to back on one GIL, two workers run them side by side
+    import http.client
+
+    page = b"<html><body>" + b"".join(
+        b"<div><a href='/p%d'>link number %d</a></div>" % (i, i)
+        for i in range(30_000)) + b"<p>The one paragraph of body text.</p>"
+    expect = extract_record("u://slow", page)["extracted_text"]
+    srv = ExtractServer()
+    srv.start()
+
+    def timed(n: int) -> float:
+        conns = []
+        for _ in range(n):
+            conn = http.client.HTTPConnection(
+                "127.0.0.1", srv.port, timeout=60)
+            conn.connect()
+            conns.append(conn)
+            # the accepting worker queues again behind the idle ones
+            time.sleep(0.05)
+        out = []
+
+        def one(conn) -> None:
+            conn.request("POST", "/extract", body=page,
+                         headers={"X-Url": "u://slow"})
+            out.append(json.loads(conn.getresponse().read())[
+                "extracted_text"])
+
+        threads = [threading.Thread(target=one, args=(c,)) for c in conns]
+        t0 = time.perf_counter()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        elapsed = time.perf_counter() - t0
+        for conn in conns:
+            conn.close()
+        assert out == [expect] * n
+        return elapsed
+
+    try:
+        # one request, then two, five times over: the median ratio rides
+        # out a host whose speed drifts between runs
+        pairs = [(timed(1), timed(2)) for _ in range(5)]
+    finally:
+        srv.close()
+    assert statistics.median(one for one, _ in pairs) >= 0.2, pairs
+    assert statistics.median(two / one for one, two in pairs) < 1.5, pairs
+
+
+@multi_core
+def test_metrics_sum_over_workers():
+    # a lost update in any worker's counters would break the totals
+    k = 48
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # the forked workers inherit it
+    srv = ExtractServer()
+    try:
+        srv.start()
+        results = _post_each(srv.port, k, b"<p>counted body text</p>")
+        _, metrics = _get(srv.port, "metrics")
+    finally:
+        sys.setswitchinterval(old)
+        srv.close()
+    assert [status for status, _ in results] == [200] * k
+    assert f"webextract_requests_total {k}\n" in metrics
+    assert "webextract_inflight 0\n" in metrics
+    assert "webextract_rejected_total 0\n" in metrics
+
+
+@multi_core
+def test_config_swap_reaches_every_worker():
+    from webextract.config import ExtractConfig
+
+    k = 24
+    srv = ExtractServer(configs={"strict": ExtractConfig(
+        min_region_size=10_000)})
+    srv.start()
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/config/swap?name=strict",
+            method="POST")
+        with urllib.request.urlopen(req, timeout=10) as resp:
+            assert resp.status == 200
+        results = _post_each(srv.port, k,
+                             b"<p>plenty of ordinary body text here</p>")
+    finally:
+        srv.close()
+    assert [(s, r["extracted_text"]) for s, r in results] == [(200, "")] * k
+
+
+@multi_core
+def test_close_leaves_no_worker_and_frees_the_port():
+    before = _children(os.getpid())
+    srv = ExtractServer()
+    srv.start()
+    port = srv.port
+    workers = _children(os.getpid()) - before
+    assert len(workers) == len(os.sched_getaffinity(0)) - 1
+    _post_each(port, 8, b"<p>some words in a block</p>")
+    srv.close()
+    assert _children(os.getpid()) == before
+    assert all(_gone(pid) for pid in workers)
+    assert _port_free(port)
+
+
+@multi_core
+def test_workers_exit_when_the_serving_process_is_killed():
+    script = ("import sys, time\n"
+              "from webextract.serve import ExtractServer\n"
+              "print(ExtractServer().start(), flush=True)\n"
+              "time.sleep(600)\n")
+    proc = subprocess.Popen(
+        [sys.executable, "-c", script], stdout=subprocess.PIPE, text=True,
+        env={**os.environ, "PYTHONPATH": str(pathlib.Path(
+            __file__).resolve().parents[1])})
+    try:
+        port = int(proc.stdout.readline())
+        status, _ = _post(port, "u://orphan", b"<p>served before kill</p>")
+        assert status == 200
+        workers = _children(proc.pid)
+        assert len(workers) == len(os.sched_getaffinity(0)) - 1
+    finally:
+        proc.kill()
+        proc.wait(timeout=10)
+    deadline = time.monotonic() + 2
+    while time.monotonic() < deadline and not all(map(_gone, workers)):
+        time.sleep(0.02)
+    assert all(map(_gone, workers)), workers
+    assert _port_free(port)
+
+
+@multi_core
+def test_serve_path_does_not_import_pyarrow():
+    script = ("import sys\n"
+              "import webextract.serve\n"
+              "from webextract.extract import extract_record\n"
+              "assert extract_record('u', b'<p>some body text</p>')"
+              "['extracted_text']\n"
+              "print(sorted(m for m in sys.modules\n"
+              "             if m.split('.')[0] in ('pyarrow', 'numpy')))\n")
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        timeout=60, check=True,
+        env={**os.environ, "PYTHONPATH": str(pathlib.Path(
+            __file__).resolve().parents[1])})
+    assert out.stdout.strip() == "[]"

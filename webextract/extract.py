@@ -9,6 +9,10 @@ engine's analog of the reference's DataLoader worker processes
 process boundary (once per batch, never per row). Arrow RecordBatches are
 consumed and produced directly (no pandas materialization): for a
 binary-payload pipeline the pandas detour costs ~4x on batch conversion.
+
+pyarrow (and the numpy it pulls in) loads only on the batch path, on the
+first batch: :func:`extract_record`, which the HTTP server runs per
+request, needs neither, so a serving process starts about 40 MB smaller.
 """
 
 from __future__ import annotations
@@ -18,9 +22,7 @@ import sys
 import time
 import zipimport
 from collections.abc import Iterator
-from typing import Any
-
-import pyarrow as pa
+from typing import TYPE_CHECKING, Any
 
 from .config import DEFAULT_CONFIG, ExtractConfig
 from .html_extract import (
@@ -32,25 +34,46 @@ from .html_extract import (
 )
 from .pdf_extract import extract_pdf, is_pdf
 
+if TYPE_CHECKING:
+    import pyarrow as pa
+
 _EMPTY = ExtractResult(text="", spans=())
 
-_SPAN_TYPE = pa.list_(pa.struct([
-    ("span_id", pa.string()),
-    ("region_class", pa.string()),
-    ("region_type", pa.string()),
-    ("char_start", pa.int64()),
-    ("char_end", pa.int64()),
-    ("reading_order", pa.int32()),
-    ("confidence", pa.float64()),
-]))
 
-_LINE_SPAN_TYPE = pa.list_(pa.struct([
-    ("line_id", pa.string()),
-    ("parent_span_id", pa.string()),
-    ("char_start", pa.int64()),
-    ("char_end", pa.int64()),
-    ("line_order", pa.int32()),
-]))
+@functools.cache
+def _arrow_types() -> tuple:
+    """(span list type, line-span list type, block-score schema), built
+    on first use so that importing this module does not import pyarrow."""
+    import pyarrow as pa
+
+    span_type = pa.list_(pa.struct([
+        ("span_id", pa.string()),
+        ("region_class", pa.string()),
+        ("region_type", pa.string()),
+        ("char_start", pa.int64()),
+        ("char_end", pa.int64()),
+        ("reading_order", pa.int32()),
+        ("confidence", pa.float64()),
+    ]))
+    line_span_type = pa.list_(pa.struct([
+        ("line_id", pa.string()),
+        ("parent_span_id", pa.string()),
+        ("char_start", pa.int64()),
+        ("char_end", pa.int64()),
+        ("line_order", pa.int32()),
+    ]))
+    block_score_schema = pa.schema([
+        ("url", pa.string()),
+        ("block_order", pa.int32()),
+        ("tag", pa.string()),
+        ("marginal", pa.bool_()),
+        ("n_chars", pa.int64()),
+        ("link_density", pa.float64()),
+        ("region_class", pa.string()),
+        ("confidence", pa.float64()),
+        ("kept", pa.bool_()),
+    ])
+    return span_type, line_span_type, block_score_schema
 
 
 def _extract_one(url: str, payload: bytes | None,
@@ -130,6 +153,9 @@ def _extract_batch(urls: list, payloads: list, cfg: ExtractConfig,
     column accumulators; spans/line_spans become Arrow List(Struct) via
     offsets + flattened child arrays — no per-row dicts, no per-span
     dicts, no pandas."""
+    import pyarrow as pa
+
+    span_type, line_span_type, _ = _arrow_types()
     n = len(urls)
     texts: list[str] = []
     n_spans: list[int] = []
@@ -181,12 +207,12 @@ def _extract_batch(urls: list, payloads: list, cfg: ExtractConfig,
          pa.array(s_typ, pa.string()), pa.array(s_cs, pa.int64()),
          pa.array(s_ce, pa.int64()), pa.array(s_ro, pa.int32()),
          pa.array(s_cf, pa.float64())],
-        fields=list(_SPAN_TYPE.value_type))
+        fields=list(span_type.value_type))
     line_struct = pa.StructArray.from_arrays(
         [pa.array(l_id, pa.string()), pa.array(l_pid, pa.string()),
          pa.array(l_cs, pa.int64()), pa.array(l_ce, pa.int64()),
          pa.array(l_lo, pa.int32())],
-        fields=list(_LINE_SPAN_TYPE.value_type))
+        fields=list(line_span_type.value_type))
     return pa.record_batch({
         "url": pa.array(urls, pa.string()),
         "extracted_text": pa.array(texts, pa.string()),
@@ -237,19 +263,6 @@ def block_score_rows(url: str, payload: bytes | None,
         return []
 
 
-_BLOCK_SCORE_ARROW = pa.schema([
-    ("url", pa.string()),
-    ("block_order", pa.int32()),
-    ("tag", pa.string()),
-    ("marginal", pa.bool_()),
-    ("n_chars", pa.int64()),
-    ("link_density", pa.float64()),
-    ("region_class", pa.string()),
-    ("confidence", pa.float64()),
-    ("kept", pa.bool_()),
-])
-
-
 def drops_zip_finders(batch_fn):
     """Wrap a ``mapInArrow``/``mapInPandas`` batch function so that, when
     its iterator ends or is closed, every ``zipimport.zipimporter`` is
@@ -287,13 +300,16 @@ def make_block_score_batches(cfg: ExtractConfig):
     def score_batches(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
+        import pyarrow as pa
+
+        schema = _arrow_types()[2]
         for batch in batches:
             urls = batch.column("url").to_pylist()
             payloads = batch.column("html").to_pylist()
             rows: list[dict] = []
             for u, p in zip(urls, payloads):
                 rows.extend(block_score_rows(u, p, cfg))
-            yield pa.RecordBatch.from_pylist(rows, schema=_BLOCK_SCORE_ARROW)
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return score_batches
 

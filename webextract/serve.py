@@ -27,13 +27,41 @@ Design mirror of the reference's Flask serving app
   spool is a valid input for Spark analysis jobs or
   ``streaming.stream_extraction`` checkpointed ingestion.
 
-Single-worker semantics: extraction is pure CPU-bound Python, so like
-the reference's one-GPU ``ThreadPoolExecutor(max_workers=1)`` the
-default admits concurrency but serializes on the GIL; scale-out is
-horizontal (N server processes behind a balancer), exactly as the
-reference deploys (``README.md`` docker section). The cluster-scale path
-remains the batch/streaming pipeline — this endpoint is for interactive
-scoring and parity debugging.
+Worker model: extraction is pure CPU-bound Python, so one process
+serializes every request on its GIL. ``start()`` therefore forks one
+worker per core of the affinity mask (``os.sched_getaffinity``; narrow it
+with ``taskset`` or a cpuset), the serving process being one of them —
+the reference scales out as N server processes, and this moves that
+inside the server.
+
+- **Blocking accept on one shared socket.** The listener is bound once,
+  before the fork. Each worker has one thread blocked in ``accept()``;
+  Linux wakes exclusive accept waiters in FIFO order, so connections
+  spread round-robin over the workers (a ``select`` loop per worker
+  wakes them all and the first to run takes the connection, which piles
+  keep-alive connections onto a few workers). Every accepted connection
+  gets its own handler thread, as in ``ThreadingHTTPServer``.
+- **Shared admission, metrics and config.** One cross-process bounded
+  semaphore of ``max_pending`` bounds admission in total, not per
+  worker; ``/metrics`` sums one counter row per worker from shared
+  memory under the same names; the active config is a shared index, so
+  ``swap_config()`` / ``POST /config/swap`` reach every worker.
+- **Per-worker spools.** Each worker buffers its own spool rows; file
+  names are uuid-unique, and ``close()`` returns after every worker has
+  flushed.
+- **Warm, then freeze, then fork.** One inline page runs through the
+  extractor and ``gc.freeze()`` moves the warm heap out of the
+  collector's reach before the fork, so the workers share its pages
+  instead of copying them on the first collection.
+- **Exit.** ``close()`` shuts the listener down, which wakes the blocked
+  ``accept()`` in every worker; each flushes its spool and leaves through
+  ``os._exit`` (no exit hooks of the process it was forked from), and
+  the serving process reaps them. A worker whose serving process dies
+  (even by SIGKILL) sees EOF on a pipe only that process writes to and
+  exits, so no orphan keeps serving the socket.
+
+The cluster-scale path remains the batch/streaming pipeline — this
+endpoint is for interactive scoring and parity debugging.
 
 No Spark session is required: the extractor is the same pure function
 (``extract_record``) the executors run, so served results are
@@ -43,9 +71,19 @@ byte-identical to pipeline output for the same payload + config.
 from __future__ import annotations
 
 import datetime as dt
+import errno
+import gc
 import json
+import mmap
+import multiprocessing
+import os
+import signal
+import socket
+import struct
+import sys
 import threading
 import time
+import traceback
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -54,31 +92,50 @@ from .config import DEFAULT_CONFIG, ExtractConfig
 from .extract import extract_record
 
 
-class _Metrics:
-    """Tiny Prometheus-text counter registry (A7 analog)."""
+def _shared_cells(fmt: str, n: int) -> memoryview:
+    """``n`` zeroed cells of struct format ``fmt`` in anonymous shared
+    memory: forked workers see each other's writes."""
+    return memoryview(mmap.mmap(-1, n * struct.calcsize(fmt))).cast(fmt)
 
-    def __init__(self) -> None:
+
+class _Metrics:
+    """Tiny Prometheus-text counter registry (A7 analog) over all workers.
+
+    Each worker adds only to its own row of one shared counter array,
+    under a lock of its own, so no update waits on another process;
+    ``render`` sums the rows."""
+
+    NAMES = ("requests_total", "errors_total", "rejected_total",
+             "inflight", "latency_sum")
+
+    def __init__(self, workers: int) -> None:
         self._lock = threading.Lock()
-        self.requests_total = 0
-        self.errors_total = 0
-        self.rejected_total = 0
-        self.inflight = 0
-        self.latency_sum = 0.0
+        self._cells = _shared_cells("d", workers * len(self.NAMES))
+        self.row = 0  # this process's worker index, set after the fork
+
+    def add(self, **deltas: float) -> None:
+        base = self.row * len(self.NAMES)
+        with self._lock:
+            for name, delta in deltas.items():
+                self._cells[base + self.NAMES.index(name)] += delta
+
+    def total(self, name: str) -> float:
+        return sum(self._cells[self.NAMES.index(name)::len(self.NAMES)])
 
     def render(self) -> str:
-        with self._lock:
-            lines = [
-                "# TYPE webextract_requests_total counter",
-                f"webextract_requests_total {self.requests_total}",
-                "# TYPE webextract_errors_total counter",
-                f"webextract_errors_total {self.errors_total}",
-                "# TYPE webextract_rejected_total counter",
-                f"webextract_rejected_total {self.rejected_total}",
-                "# TYPE webextract_inflight gauge",
-                f"webextract_inflight {self.inflight}",
-                "# TYPE webextract_latency_seconds_sum counter",
-                f"webextract_latency_seconds_sum {round(self.latency_sum, 6)}",
-            ]
+        t = {name: self.total(name) for name in self.NAMES}
+        lines = [
+            "# TYPE webextract_requests_total counter",
+            f"webextract_requests_total {int(t['requests_total'])}",
+            "# TYPE webextract_errors_total counter",
+            f"webextract_errors_total {int(t['errors_total'])}",
+            "# TYPE webextract_rejected_total counter",
+            f"webextract_rejected_total {int(t['rejected_total'])}",
+            "# TYPE webextract_inflight gauge",
+            f"webextract_inflight {int(t['inflight'])}",
+            "# TYPE webextract_latency_seconds_sum counter",
+            f"webextract_latency_seconds_sum {round(t['latency_sum'], 6)}",
+        ]
         return "\n".join(lines) + "\n"
 
 
@@ -153,11 +210,40 @@ class _Spool:
         self._pending_bytes = 0
 
 
+# one page that runs the HTML path end to end, to warm the extractor
+# before the workers fork
+_WARMUP_PAGE = (
+    b"<html><head><title>warm</title></head><body>"
+    b"<nav><a href='/'>home</a> <a href='/about'>about</a></nav>"
+    b"<article><h1>Warm-up heading</h1><p>" + b"Body text of the page. " * 20
+    + b"</p><ul><li>first item</li><li>second item</li></ul></article>"
+    b"<footer>footer &amp; links</footer></body></html>")
+
+# the shared primitives must survive a plain os.fork(): "fork"-context
+# semaphores are unlinked at creation and need no resource tracker
+_FORK = multiprocessing.get_context("fork")
+
+
+def _worker_count() -> int:
+    """One worker per core this process may run on."""
+    if not hasattr(os, "sched_getaffinity"):
+        return 1
+    return len(os.sched_getaffinity(0))
+
+
+def _exit_on_eof(fd: int) -> None:
+    """Worker side of the parent-death pipe: only the serving process
+    holds the write end, so EOF means it is gone."""
+    os.read(fd, 1)
+    os._exit(1)
+
+
 class ExtractServer:
-    """Threaded HTTP server wrapping the pure extractor.
+    """Threaded HTTP server wrapping the pure extractor, one forked
+    worker per core (see the module docstring).
 
     ``start()`` returns the bound port (pass ``port=0`` for ephemeral);
-    ``close()`` stops the server and flushes the spool.
+    ``close()`` stops every worker and flushes the spools.
     """
 
     def __init__(self, cfg: ExtractConfig = DEFAULT_CONFIG,
@@ -169,53 +255,130 @@ class ExtractServer:
                  configs: dict[str, ExtractConfig] | None = None) -> None:
         # named config registry + runtime hot-swap (the reference swaps
         # models by name at runtime, api/flask_app.py:76-110): the active
-        # config is read once per request under the lock, so an in-flight
-        # request finishes on the config it was admitted with
+        # config is read once per request, so an in-flight request
+        # finishes on the config it was admitted with. The active name
+        # is an index into the registry in shared memory, so a swap in
+        # one worker reaches all of them.
         self.configs = {"default": cfg, **(configs or {})}
-        self._active = "default"
-        self._cfg_lock = threading.Lock()
+        self._active = _shared_cells("q", 1)
         self.max_body_bytes = max_body_bytes
         self.idle_timeout = idle_timeout
-        self.metrics = _Metrics()
+        self._workers = _worker_count()
+        self.metrics = _Metrics(self._workers)
         self.spool = _Spool(spool_dir, flush_every, flush_bytes)
-        self._admission = threading.BoundedSemaphore(max_pending)
+        self._admission = _FORK.BoundedSemaphore(max_pending)
         self._httpd = ThreadingHTTPServer((host, port), self._handler())
         self._thread: threading.Thread | None = None
+        self._pids: list[int] = []
+        self._alive_w: int | None = None  # write end of the death pipe
 
     @property
     def cfg(self) -> ExtractConfig:
-        with self._cfg_lock:
-            return self.configs[self._active]
+        return self.configs[self.active_config]
 
     @property
     def active_config(self) -> str:
-        with self._cfg_lock:
-            return self._active
+        return list(self.configs)[self._active[0]]
 
     def swap_config(self, name: str) -> ExtractConfig:
         """Switch the active config to a registered name (hot-swap)."""
-        with self._cfg_lock:
-            if name not in self.configs:
-                raise KeyError(name)
-            self._active = name
-            return self.configs[name]
+        if name not in self.configs:
+            raise KeyError(name)
+        self._active[0] = list(self.configs).index(name)
+        return self.configs[name]
 
     @property
     def port(self) -> int:
         return self._httpd.server_address[1]
 
     def start(self) -> int:
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True)
+        if self._workers > 1:
+            self._fork_workers()
+        self._thread = threading.Thread(target=self._accept_loop,
+                                        daemon=True)
         self._thread.start()
         return self.port
 
     def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
+        try:
+            # wakes the blocked accept() in every worker with EINVAL
+            self._httpd.socket.shutdown(socket.SHUT_RDWR)
+        except OSError:
+            pass  # closed already
         if self._thread is not None:
             self._thread.join(timeout=10)
+        self._httpd.server_close()
         self.spool.close()
+        self._reap_workers()
+
+    # -- workers --------------------------------------------------------
+
+    def _fork_workers(self) -> None:
+        extract_record("u://warmup", _WARMUP_PAGE)
+        if self.spool.dir is not None:
+            # spool flushes need pyarrow: one shared copy, not one per worker
+            import pyarrow.parquet  # noqa: F401
+        gc.collect()
+        gc.freeze()
+        alive_r, self._alive_w = os.pipe()
+        for row in range(1, self._workers):
+            pid = os.fork()
+            if pid == 0:
+                self._worker(row, alive_r)  # never returns
+            self._pids.append(pid)
+        os.close(alive_r)
+
+    def _worker(self, row: int, alive_r: int) -> None:
+        """Body of a forked worker: serve until the listener shuts down,
+        flush the spool, and exit without running the exit hooks of the
+        process it was forked from."""
+        code = 1
+        try:
+            os.close(self._alive_w)
+            self.metrics.row = row
+            threading.Thread(target=_exit_on_eof, args=(alive_r,),
+                             daemon=True).start()
+            self._accept_loop()
+            self.spool.close()
+            code = 0
+        except BaseException:
+            # os._exit below skips the interpreter's own report
+            traceback.print_exc()
+            sys.stderr.flush()
+            raise
+        finally:
+            os._exit(code)
+
+    def _accept_loop(self) -> None:
+        """Block in accept() on the shared listener and hand every
+        connection to a handler thread, until close() shuts it down."""
+        httpd = self._httpd
+        while True:
+            try:
+                request, addr = httpd.get_request()
+            except OSError as exc:
+                if exc.errno in (errno.EINVAL, errno.EBADF):
+                    return  # the listener was shut down
+                continue  # e.g. the client reset before accept()
+            try:
+                httpd.process_request(request, addr)
+            except Exception:
+                httpd.handle_error(request, addr)
+                httpd.shutdown_request(request)
+
+    def _reap_workers(self) -> None:
+        deadline = time.monotonic() + 10
+        for pid in self._pids:
+            while os.waitpid(pid, os.WNOHANG)[0] == 0:
+                if time.monotonic() > deadline:  # stuck: stop it
+                    os.kill(pid, signal.SIGKILL)
+                    os.waitpid(pid, 0)
+                    break
+                time.sleep(0.005)
+        self._pids = []
+        if self._alive_w is not None:
+            os.close(self._alive_w)
+            self._alive_w = None
 
     # -- request handling -----------------------------------------------
 
@@ -223,12 +386,9 @@ class ExtractServer:
         t0 = time.perf_counter()
         cfg = self.cfg  # one registry read; stable for this request
         row = extract_record(url, payload, cfg)
-        m = self.metrics
-        with m._lock:
-            m.requests_total += 1
-            m.latency_sum += time.perf_counter() - t0
-            if row["error"] is not None:
-                m.errors_total += 1
+        self.metrics.add(requests_total=1,
+                         latency_sum=time.perf_counter() - t0,
+                         errors_total=row["error"] is not None)
         self.spool.add(row, payload)
         return row
 
@@ -332,29 +492,25 @@ class ExtractServer:
                                close=True)
                     return
                 if n > server.max_body_bytes:
-                    with server.metrics._lock:
-                        server.metrics.rejected_total += 1
+                    server.metrics.add(rejected_total=1)
                     self._send(413, b'{"error": "payload too large"}',
                                close=True)
                     return
                 # bounded admission: shed load instead of queueing
                 # unboundedly (reference LAYPA_MAX_QUEUE_SIZE -> 429)
-                if not server._admission.acquire(blocking=False):
-                    with server.metrics._lock:
-                        server.metrics.rejected_total += 1
+                if not server._admission.acquire(block=False):
+                    server.metrics.add(rejected_total=1)
                     self._send(429, b'{"error": "queue full"}',
                                close=True)
                     return
-                with server.metrics._lock:
-                    server.metrics.inflight += 1
+                server.metrics.add(inflight=1)
                 try:
                     payload = self.rfile.read(n) if n else b""
                     row = server._extract(url, payload)
                     body = json.dumps(row).encode()
                     self._send(200, body)
                 finally:
-                    with server.metrics._lock:
-                        server.metrics.inflight -= 1
+                    server.metrics.add(inflight=-1)
                     server._admission.release()
 
         return Handler
