@@ -20,8 +20,8 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        # one session serves every test file; composed-operator caches
-        # and iterative localCheckpoints need headroom beyond the 1g
+        # one session serves every test file; composed-operator
+        # localCheckpoints need headroom beyond the 1g
         # default (must be set before the JVM launches)
         .config("spark.driver.memory", "4g")
         .getOrCreate()

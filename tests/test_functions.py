@@ -672,7 +672,6 @@ def test_curate_corpus_transitive_vs_greedy(spark):
 
 
 def test_curate_corpus_staged_candidates_match_fused(spark):
-    from webextract.functions.cache import cache_scope
     from webextract.functions.curate import curate_corpus
     from webextract.functions.dedup import lsh_candidate_pairs, with_minhash
 
@@ -687,27 +686,22 @@ def test_curate_corpus_staged_candidates_match_fused(spark):
         Row(doc_id=4, text="ab cd"),
     ]
     docs = spark.createDataFrame(rows)
-    with cache_scope() as scope:
-        fused = sorted(r["doc_id"] for r in curate_corpus(
-            docs, min_quality=0.3, threshold=0.8, scope=scope).collect())
+    fused = sorted(r["doc_id"] for r in curate_corpus(
+        docs, min_quality=0.3, threshold=0.8).collect())
     # production shape: corpus-level candidates precomputed once, fed in
-    with cache_scope() as scope:
-        cands = scope.persist(lsh_candidate_pairs(
-            with_minhash(docs), persist_bands=False))
-        staged = sorted(r["doc_id"] for r in curate_corpus(
-            docs, min_quality=0.3, threshold=0.8, candidates=cands,
-            scope=scope).collect())
+    cands = lsh_candidate_pairs(
+        with_minhash(docs), persist_bands=False).localCheckpoint(eager=False)
+    staged = sorted(r["doc_id"] for r in curate_corpus(
+        docs, min_quality=0.3, threshold=0.8, candidates=cands).collect())
     assert staged == fused == [1]
     # deepest staging: corpus-level VERIFIED pairs fed in, verification
     # skipped entirely — identical survivors
     from webextract.functions.dedup import near_duplicate_docs
 
-    with cache_scope() as scope:
-        pairs = scope.persist(near_duplicate_docs(
-            docs, threshold=0.8, scope=scope))
-        via_pairs = sorted(r["doc_id"] for r in curate_corpus(
-            docs, min_quality=0.3, threshold=0.8, pairs=pairs,
-            scope=scope).collect())
+    pairs = near_duplicate_docs(docs, threshold=0.8) \
+        .localCheckpoint(eager=False)
+    via_pairs = sorted(r["doc_id"] for r in curate_corpus(
+        docs, min_quality=0.3, threshold=0.8, pairs=pairs).collect())
     assert via_pairs == fused
 
 
@@ -715,7 +709,6 @@ def test_dedup_increment_rules(spark):
     """Incremental snapshot dedup, each rule pinned: corpus exact dup,
     corpus near dup, in-batch exact dup (keep-lowest), in-batch near dup
     (keep-lowest), fresh doc survives; corpus docs are never emitted."""
-    from webextract.functions.cache import cache_scope
     from webextract.functions.dedup import dedup_increment
 
     base = ("the quick brown fox jumps over the lazy dog and runs through "
@@ -738,15 +731,11 @@ def test_dedup_increment_rules(spark):
         Row(doc_id=17, text=other),                      # in-batch exact dup
         Row(doc_id=19, text=other.rsplit(" ", 1)[0] + " zzz"),  # near of 15
     ])
-    with cache_scope() as scope:
-        out = sorted(r["doc_id"] for r in
-                     dedup_increment(new, corpus, scope=scope).collect())
+    out = sorted(r["doc_id"] for r in dedup_increment(new, corpus).collect())
     assert out == [15]
     # in-batch keep-lowest: with 15 absent, 17 would have survived
-    with cache_scope() as scope:
-        out2 = sorted(r["doc_id"] for r in dedup_increment(
-            new.filter(F.col("doc_id") != 15), corpus,
-            scope=scope).collect())
+    out2 = sorted(r["doc_id"] for r in dedup_increment(
+        new.filter(F.col("doc_id") != 15), corpus).collect())
     assert out2 == [17]
     # precomputed corpus stage tables (the at-scale shape) give the
     # same answer without touching corpus text for signatures
@@ -757,10 +746,9 @@ def test_dedup_increment_rules(spark):
                                                  "UTF-8"))
                         .alias("fingerprint"))
     csig = with_minhash(corpus)
-    with cache_scope() as scope:
-        out3 = sorted(r["doc_id"] for r in dedup_increment(
-            new, corpus, corpus_fingerprints=cfp, corpus_signatures=csig,
-            scope=scope).collect())
+    out3 = sorted(r["doc_id"] for r in dedup_increment(
+        new, corpus, corpus_fingerprints=cfp,
+        corpus_signatures=csig).collect())
     assert out3 == [15]
 
 
@@ -796,15 +784,18 @@ def test_curate_full_stage_path_matches_local_checkpoint(spark, tmp_path):
     assert clean.count() > 0 and "text" in clean.columns
 
 
-def test_cache_scope_releases(spark):
-    from webextract.functions.cache import cache_scope
+@pytest.mark.parametrize("query", ["curate_full", "dup_groups",
+                                   "dedup_increment", "jaccard_pairs"])
+def test_composed_queries_leave_no_cached_relation(spark, query):
+    """Composed stages materialize with localCheckpoint, which the
+    ContextCleaner frees; none may leave a relation in Spark's
+    CacheManager, where it would outlive the query in a long-lived
+    session."""
+    import __spark_entry__ as entrymod
 
-    df = spark.range(10)
-    with cache_scope() as scope:
-        cached = scope.persist(df)
-        cached.count()
-        assert cached.storageLevel.useMemory
-    assert not cached.storageLevel.useMemory  # released on exit
+    spark.catalog.clearCache()
+    entrymod.queries()[query](spark, "/root/testdata/sf0.001").collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_near_duplicate_pairs_lsh_subset_of_exact(spark):

@@ -59,9 +59,10 @@ def test_parity(spark, duck, name):
     try:
         srows = sdf.collect()
     finally:
-        # composed queries persist shared relations under the session-
-        # scope contract; release them between parametrized cases so the
-        # shared test session's heap stays flat across 30+ queries
+        # composed queries materialize with localCheckpoint and cache
+        # nothing; a query or fixture that did call cache()/persist()
+        # would otherwise keep its blocks in the shared test session
+        # across 30+ parametrized cases
         spark.catalog.clearCache()
     scols = sdf.columns
     res = duck.execute(ORACLE[name]).fetchall()

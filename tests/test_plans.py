@@ -46,19 +46,13 @@ def test_extraction_scan_prunes_to_url_html(spark, tmp_path):
         .write.parquet(path)
     pages = spark.read.schema(PAGES_SCHEMA).parquet(path)
 
-    # default single-pass mode: ONE scan, ONE exchange
+    # ONE scan, ONE exchange (giants get their own salt space)
     plan = plan_of(extract_dataframe(pages, opts=PipelineOptions(num_partitions=2)))
     # the scan must read ONLY url+html — warc_ts/text/lang never cross
     assert "ReadSchema: struct<url:string,html:binary>" in plan
     assert "MapInArrow" in plan
     assert _count_nodes(plan, "Exchange") == 1, plan
     assert _count_nodes(plan, "Scan parquet") == 1, plan
-
-    # dual mode: two scans, two exchanges (salted hash + giant round-robin)
-    plan2 = plan_of(extract_dataframe(
-        pages, opts=PipelineOptions(num_partitions=2, scan_mode="dual")))
-    assert _count_nodes(plan2, "Exchange") == 2, plan2
-    assert _count_nodes(plan2, "Scan parquet") == 2, plan2
 
 
 def test_minhash_is_shuffle_free_single_fold(docs):

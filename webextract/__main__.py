@@ -74,8 +74,6 @@ def _add_extract_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--config", default=None, help="ExtractConfig JSON file")
     p.add_argument("--partitions", type=int, default=32)
     p.add_argument("--giant-bytes", type=int, default=1 << 20)
-    p.add_argument("--scan-mode", choices=("single", "dual"),
-                   default="single")
     p.add_argument("--run-id", default=None)
     p.add_argument("--partition-by-date", action="store_true",
                    help="hive-partition the sink by warc_date (crawl day)")
@@ -236,7 +234,6 @@ def main(argv: list[str] | None = None) -> int:
         cfg = load_config(args.config)
         opts = PipelineOptions(num_partitions=args.partitions,
                                giant_bytes=args.giant_bytes,
-                               scan_mode=args.scan_mode,
                                sink_format=args.sink_format,
                                sink_is_table=args.sink_table)
         if args.input_format == "warc":
@@ -270,7 +267,6 @@ def _run_increment(spark, args) -> dict:
     """Snapshot-growth dedup: new batch vs committed corpus, survivors
     to parquet. With --stages, the committed corpus's stored signature
     stage table feeds the band join instead of being re-derived."""
-    from .functions.cache import cache_scope
     from .functions.dedup import dedup_increment
 
     new = spark.read.parquet(args.input)
@@ -278,12 +274,10 @@ def _run_increment(spark, args) -> dict:
     corpus_sigs = (spark.read.parquet(f"{args.stages.rstrip('/')}"
                                       "/signatures")
                    if args.stages else None)
-    with cache_scope() as scope:
-        out = dedup_increment(new, corpus, id_col=args.id_col,
-                              text_col=args.text_col,
-                              threshold=args.threshold,
-                              corpus_signatures=corpus_sigs, scope=scope)
-        out.write.mode("overwrite").parquet(args.output)
+    out = dedup_increment(new, corpus, id_col=args.id_col,
+                          text_col=args.text_col, threshold=args.threshold,
+                          corpus_signatures=corpus_sigs)
+    out.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     return {"new_rows": new.count(), "survivors": n}
 
@@ -292,7 +286,6 @@ def _run_dedup_stages(spark, args) -> dict:
     """Materialize the production dedup stages once per corpus snapshot;
     downstream consumers (curate --stages, analytics) read them back as
     plain scans instead of re-deriving the MinHash stack."""
-    from .functions.cache import cache_scope
     from .functions.dedup import (
         lsh_candidate_pairs, near_duplicate_docs, with_minhash,
     )
@@ -301,21 +294,20 @@ def _run_dedup_stages(spark, args) -> dict:
         raise SystemExit("--n-hashes must be divisible by --band-size")
     docs = spark.read.parquet(args.input)
     out = args.output.rstrip("/")
-    with cache_scope() as scope:
-        sig = with_minhash(docs, args.id_col, args.text_col,
-                           n_hashes=args.n_hashes)
-        sig.write.mode("overwrite").parquet(f"{out}/signatures")
-        sig = spark.read.parquet(f"{out}/signatures")
-        cands = lsh_candidate_pairs(sig, id_col=args.id_col,
-                                    n_hashes=args.n_hashes,
-                                    band_size=args.band_size,
-                                    persist_bands=False)
-        cands.write.mode("overwrite").parquet(f"{out}/candidates")
-        cands = spark.read.parquet(f"{out}/candidates")
-        pairs = near_duplicate_docs(
-            docs, id_col=args.id_col, text_col=args.text_col,
-            threshold=args.threshold, candidates=cands, scope=scope)
-        pairs.write.mode("overwrite").parquet(f"{out}/pairs")
+    sig = with_minhash(docs, args.id_col, args.text_col,
+                       n_hashes=args.n_hashes)
+    sig.write.mode("overwrite").parquet(f"{out}/signatures")
+    sig = spark.read.parquet(f"{out}/signatures")
+    cands = lsh_candidate_pairs(sig, id_col=args.id_col,
+                                n_hashes=args.n_hashes,
+                                band_size=args.band_size,
+                                persist_bands=False)
+    cands.write.mode("overwrite").parquet(f"{out}/candidates")
+    cands = spark.read.parquet(f"{out}/candidates")
+    pairs = near_duplicate_docs(
+        docs, id_col=args.id_col, text_col=args.text_col,
+        threshold=args.threshold, candidates=cands)
+    pairs.write.mode("overwrite").parquet(f"{out}/pairs")
     # stage metadata: pairs are only valid for curate thresholds >= the
     # stage threshold (lower ones would silently under-drop — the pairs
     # scan excludes [curate_t, stage_t)); written as a 1-row json dir so
@@ -401,7 +393,6 @@ def _run_hygiene(spark, args) -> dict:
 
 
 def _run_curate(spark, args) -> dict:
-    from .functions.cache import cache_scope
     from .functions.curate import curate_corpus
 
     docs = spark.read.parquet(args.input)
@@ -433,13 +424,11 @@ def _run_curate(spark, args) -> dict:
                            f"curate threshold {args.threshold} < stage "
                            f"threshold {meta['threshold']}"),
             }), file=sys.stderr)
-    with cache_scope() as scope:
-        survivors = curate_corpus(
-            docs, id_col=args.id_col, text_col=args.text_col,
-            min_quality=args.min_quality, threshold=args.threshold,
-            candidates=candidates, pairs=pairs,
-            transitive=args.transitive, scope=scope)
-        survivors.write.mode("overwrite").parquet(args.output)
+    survivors = curate_corpus(
+        docs, id_col=args.id_col, text_col=args.text_col,
+        min_quality=args.min_quality, threshold=args.threshold,
+        candidates=candidates, pairs=pairs, transitive=args.transitive)
+    survivors.write.mode("overwrite").parquet(args.output)
     n_in = docs.count()
     n_out = spark.read.parquet(args.output).count()
     return {"rows_in": n_in, "rows_out": n_out,

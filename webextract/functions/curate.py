@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .cache import CacheScope, resolve
 from .dedup import duplicate_groups, near_duplicate_docs
 from .text import with_text_features
 
@@ -37,11 +36,9 @@ from .text import with_text_features
 def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", min_quality: float = 0.3,
                   threshold: float = 0.8,
-                  persist_survivors: bool = True,
                   candidates: DataFrame | None = None,
                   pairs: DataFrame | None = None,
-                  transitive: bool = False,
-                  scope: CacheScope | None = None) -> DataFrame:
+                  transitive: bool = False) -> DataFrame:
     """corpus → surviving documents after quality + exact + near-dup.
 
     Returns (id, n_tokens, quality_score, fingerprint) for every
@@ -61,28 +58,25 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     results are identical. ``pairs`` wins when both are given (it skips
     verification entirely).
 
-    ``persist_survivors`` materializes the exact-dedup survivor set,
-    which the near-dup stage consumes THREE times (shingle derivation,
-    pair verification, final anti-join) — without it the whole
+    The feature stage and the exact-dedup survivor set are each
+    checkpointed (``localCheckpoint(eager=False)``): the near-dup stage
+    consumes the survivors THREE times (shingle derivation, pair
+    verification, final anti-join), and without the cut the whole
     feature+dedup subtree recomputes per consumer (measured ~3x wall on
-    the fused plan). Release contract is ``scope``
-    (:mod:`webextract.functions.cache`): ``scope=None`` leaves caches to
-    session teardown (one-shot jobs); long-lived sessions pass a
-    ``cache_scope()`` and release after the consuming action.
+    the fused plan). Checkpoint blocks are freed by the ContextCleaner
+    once the returned frame is unreferenced, so nothing needs releasing.
     """
-    sc = resolve(scope)
+    # checkpoint the feature stage BEFORE the quality filter: a
+    # deterministic filter is otherwise pushed below the feature
+    # projections, substituting the full quality expression — including
+    # the top-2-gram sort + aggregate fold, which the filter condition
+    # then re-evaluates per reference — into the scan (measured 8× the
+    # feature cost at sf0.1). At 10^12 docs features are a stored
+    # per-snapshot stage table exactly like signatures/candidates; this
+    # checkpoint is its local stand-in.
     feats = with_text_features(docs).select(
-        id_col, text_col, "n_tokens", "quality_score", "fingerprint")
-    if persist_survivors:
-        # materialize the feature stage BEFORE the quality filter: a
-        # deterministic filter is otherwise pushed below the feature
-        # projections, substituting the full quality expression —
-        # including the top-2-gram sort + aggregate fold, which the
-        # filter condition then re-evaluates per reference — into the
-        # scan (measured 8× the feature cost at sf0.1). At 10^12 docs
-        # features are a stored per-snapshot stage table exactly like
-        # signatures/candidates; this persist is its local stand-in.
-        feats = sc.persist(feats)
+        id_col, text_col, "n_tokens", "quality_score", "fingerprint") \
+        .localCheckpoint(eager=False)
     passing = feats.filter(F.col("quality_score") >= min_quality)
     # exact dedup keep-first: the min id per fingerprint survives.
     # Deliberately groupBy(min) + semi-join rather than a window-min:
@@ -93,23 +87,20 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
     # corpus scale the narrow agg + id-keyed join still beats sorting
     # text rows.
     keep = passing.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
+    # lineage CUT (the dedup_increment lesson): the near-dup verify
+    # chain below references this relation many times (shingle
+    # semi-join, band sides, verify join, final anti-join); uncut, every
+    # reference re-analyzes the whole feature tree, and the composed
+    # curate_full plan measured 407 KB (exact) / 1.9 MB (approx) of
+    # physical-plan text with driver analysis dominating wall time. The
+    # checkpoint makes each reference a constant-size leaf. At cluster
+    # scale the equivalent is the stored exact-survivor stage table
+    # (curate_full's ``stage_path`` seam covers the durable shape).
     exact_survivors = passing.join(
-        keep.select(id_col), id_col, "left_semi")
-    if persist_survivors:
-        # lineage CUT, not persist (the dedup_increment lesson,
-        # dedup.py:448): the near-dup verify chain below references this
-        # relation many times (shingle semi-join, band sides, verify
-        # join, final anti-join), and an InMemoryRelation keeps the
-        # whole analyzed feature tree as its child — every reference
-        # re-analyzes it, and the composed curate_full plan measured
-        # 407 KB (exact) / 1.9 MB (approx) of physical-plan text with
-        # driver analysis dominating wall time. The checkpoint makes
-        # each reference a constant-size leaf. At cluster scale the
-        # equivalent is the stored exact-survivor stage table
-        # (curate_full's ``stage_path`` seam covers the durable shape).
-        exact_survivors = exact_survivors.select(
-            id_col, text_col, "n_tokens", "quality_score", "fingerprint") \
-            .localCheckpoint(eager=False)
+        keep.select(id_col), id_col, "left_semi") \
+        .select(id_col, text_col, "n_tokens", "quality_score",
+                "fingerprint") \
+        .localCheckpoint(eager=False)
     def _narrow(rel: DataFrame) -> DataFrame:
         ids = exact_survivors.select(F.col(id_col).alias("_sid"))
         return (
@@ -125,7 +116,7 @@ def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
         pairs = near_duplicate_docs(
             exact_survivors.select(F.col(id_col), F.col(text_col)),
             id_col=id_col, text_col=text_col, threshold=threshold,
-            candidates=candidates, scope=sc)
+            candidates=candidates)
     if transitive:
         # cluster-consistent drop: exactly one survivor (the min id) per
         # connected component of verified pairs — a chain a~b~c keeps
@@ -150,8 +141,7 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
                 min_quality: float = 0.3, threshold: float = 0.8,
                 budget_tokens: int = 3000, budget_mode: str = "exact",
                 transitive: bool = False,
-                stage_path: str | None = None,
-                scope: CacheScope | None = None) -> DataFrame:
+                stage_path: str | None = None) -> DataFrame:
     """The complete production curation chain, one staged pipeline:
 
     1. **URL canonicalization + re-crawl collapse** — re-crawls and
@@ -197,7 +187,6 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
         with_pii_masked,
     )
 
-    sc = resolve(scope)
     # re-crawl collapse keep-first: groupBy(min) + id-keyed semi-join
     # (NOT a window-min — see the rationale at curate_corpus's exact
     # dedup: the window would sort and exchange full text rows)
@@ -248,7 +237,7 @@ def curate_full(docs: DataFrame, blocked: DataFrame, benchmark: DataFrame,
         clean = clean.localCheckpoint(eager=False)
     survivors = curate_corpus(clean, id_col=id_col, text_col=text_col,
                               min_quality=min_quality, threshold=threshold,
-                              transitive=transitive, scope=sc)
+                              transitive=transitive)
     # the budget stage needs only (id, stratum, priority, n_tokens):
     # survivors already carry quality_score AND n_tokens (computed by
     # the feature stage over the same masked text), so the join pulls

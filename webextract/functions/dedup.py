@@ -22,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .cache import CacheScope, resolve
 from .text import norm_text
 
 N_MINHASH = 4
@@ -132,8 +131,7 @@ def band_table(signatures: DataFrame, id_col: str = "doc_id",
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
                         n_hashes: int = N_MINHASH,
                         band_size: int = 2,
-                        persist_bands: bool = True,
-                        scope: CacheScope | None = None) -> DataFrame:
+                        persist_bands: bool = True) -> DataFrame:
     """Band the signatures and self-join per band → candidate pairs (a<b).
 
     Each band key is a hash of ``band_size`` consecutive minhashes; docs
@@ -141,16 +139,15 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     so the shuffle is balanced; a skewed bucket (e.g. the empty-text
     signature) is bounded by dropping NULL-signature rows.
 
-    ``persist_bands`` cache contract: the default materializes the band
-    table once so the self-join does not recompute the whole
-    shingle→md5→minhash subtree per join side (measured ~1.4x on a fused
-    plan; Spark does not exchange-reuse across the rename). With
-    ``scope=None`` the cache lives until ``spark.catalog.clearCache()``
-    or session stop — right for one-shot jobs; long-lived sessions pass
-    a :class:`~webextract.functions.cache.CacheScope` (via
-    ``cache_scope()``) and release deterministically after the consuming
-    action. When ``signatures`` is already materialized (a column in the
-    corpus table, a cached DataFrame — the at-scale shape), pass
+    ``persist_bands``: the default checkpoints the band table
+    (``localCheckpoint(eager=False)``) so the self-join does not
+    recompute the whole shingle→md5→minhash subtree per join side
+    (measured ~1.4x on a fused plan; Spark does not exchange-reuse
+    across the rename). The checkpoint is written by the first action
+    that reads it and freed by the ContextCleaner once the returned
+    frame is unreferenced, so it needs no release. When ``signatures``
+    is already materialized (a column in the corpus table, a
+    checkpointed DataFrame — the at-scale shape), pass
     ``persist_bands=False``: recomputing the banding over materialized
     signatures is just an md5.
     """
@@ -158,7 +155,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     all_bands = band_table(signatures, id_col=id_col, n_hashes=n_hashes,
                            band_size=band_size)
     if persist_bands:
-        all_bands = resolve(scope).persist(all_bands)
+        all_bands = all_bands.localCheckpoint(eager=False)
     left = all_bands.select(F.col(id_col).alias("doc_a"), "band_key")
     right = all_bands.select(F.col(id_col).alias("doc_b"), "band_key")
     return (
@@ -215,18 +212,18 @@ def simhash16(docs: DataFrame, id_col: str = "doc_id",
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
-                        threshold: float = 0.8,
-                        scope: CacheScope | None = None) -> DataFrame:
+                        threshold: float = 0.8) -> DataFrame:
     """Pairs (a<b) with Jaccard similarity >= threshold over distinct
     word 3-gram shingles. Exact; at scale feed it LSH candidates.
 
     Per-doc shingle dedup is ``array_distinct`` inside codegen — (id, sh)
     duplicates only occur within one document, so no global ``distinct``
     exchange is needed, and sizes are a row-local ``size()``. The compact
-    per-doc set relation is materialized once (``scope`` release
-    contract): it feeds both self-join sides and the sizes projection,
-    and with no exchange below the join there is otherwise nothing for
-    ReuseExchange to share — each side would re-shingle the corpus.
+    per-doc set relation is checkpointed once
+    (``localCheckpoint(eager=False)``): it feeds both self-join sides and
+    the sizes projection, and with no exchange below the join there is
+    otherwise nothing for ReuseExchange to share — each side would
+    re-shingle the corpus.
 
     Shingles are hashed to 60-bit ints (:func:`hash60`) BEFORE the
     self-join: the exchange then moves 8-byte keys instead of ~15-byte×w
@@ -234,10 +231,11 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     since the md5-derived hash is deterministic the DuckDB oracle stays
     exact. Collisions (p ≈ n²/2^61 per doc pair) cannot produce a false
     pair on their own; they could only nudge a count."""
-    sets = resolve(scope).persist(docs.select(
+    sets = docs.select(
         F.col(id_col).alias("id"),
         F.array_distinct(
-            F.transform(shingles(norm_text(text_col)), hash60)).alias("shs")))
+            F.transform(shingles(norm_text(text_col)), hash60)).alias("shs")) \
+        .localCheckpoint(eager=False)
     # set sizes ride THROUGH the shingle self-join as one extra 4-byte
     # int per row instead of two id-keyed joins after the aggregation:
     # the per-group size is constant, so max() recovers it exactly and
@@ -427,7 +425,7 @@ def candidate_shingle_sets(docs: DataFrame, cands: DataFrame,
     """(id, shs: array<bigint>) — the DISTINCT hashed-shingle set per doc
     that appears in a candidate-pair set, one compact array row per doc.
     Shingles are :func:`hash60`-hashed at materialization so the verify
-    join exchanges 8-byte ints, not n-gram strings (and the persisted
+    join exchanges 8-byte ints, not n-gram strings (and the checkpointed
     relation is several-fold smaller).
 
     Two scale properties: the semi-join before shingling keeps the
@@ -459,8 +457,7 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
                     threshold: float = 0.8,
                     n_hashes: int = N_MINHASH, band_size: int = 2,
                     corpus_fingerprints: DataFrame | None = None,
-                    corpus_signatures: DataFrame | None = None,
-                    scope: CacheScope | None = None) -> DataFrame:
+                    corpus_signatures: DataFrame | None = None) -> DataFrame:
     """Dedup a NEW crawl snapshot against a committed corpus without
     re-deduping the corpus — the incremental-growth shape of a
     continuously-crawled 100 TB training set (the committed side is
@@ -494,8 +491,6 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
     for the candidate-bounded verification; left unset, both derive
     from ``corpus`` in one map-only pass (the local/test shape).
     """
-    sc = resolve(scope)
-
     def _fps(df: DataFrame) -> DataFrame:
         return df.select(
             F.col(id_col),
@@ -516,7 +511,7 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
             "_min_id",
             F.min(id_col).over(Window.partitionBy("fingerprint")))
         .filter(F.col(id_col) == F.col("_min_id")).drop("_min_id"))
-    # lineage cut, not persist (the curate_full lesson, curate.py:128):
+    # lineage cut, not persist (the curate_full lesson):
     # the banding/verify/drop chain below references these relations
     # dozens of times, and an InMemoryRelation keeps the whole analyzed
     # producer tree as its child — AQE re-analyzes it per reference and
@@ -538,7 +533,8 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
     corpus_sigs = (corpus_signatures if corpus_signatures is not None
                    else with_minhash(corpus.select(id_col, text_col),
                                      id_col, text_col, n_hashes))
-    nb = sc.persist(band_table(new_sigs, id_col, n_hashes, band_size))
+    nb = band_table(new_sigs, id_col, n_hashes, band_size) \
+        .localCheckpoint(eager=False)
     cb = band_table(corpus_sigs, id_col, n_hashes, band_size)
     other = (cb.select(F.col(id_col).alias("_o"), "band_key")
              .unionByName(nb.select(F.col(id_col).alias("_o"),
@@ -560,7 +556,7 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
     # thanks to the cands/sets cuts inside the verify)
     pairs = near_duplicate_docs(
         universe, id_col=id_col, text_col=text_col, threshold=threshold,
-        candidates=cands, scope=sc)
+        candidates=cands)
     # greedy drop rule over verified pairs (doc_a < doc_b): the higher
     # new id of a new-new pair, and the new side of a corpus-new pair.
     # Two left joins with membership markers replace the previous
@@ -583,8 +579,7 @@ def dedup_increment(new_docs: DataFrame, corpus: DataFrame,
 def near_duplicate_docs(docs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
                         threshold: float = 0.8,
-                        candidates: DataFrame | None = None,
-                        scope: CacheScope | None = None) -> DataFrame:
+                        candidates: DataFrame | None = None) -> DataFrame:
     """The composed at-scale near-dup pipeline: MinHash → LSH banding →
     exact Jaccard verification on the candidate pairs only.
 
@@ -609,13 +604,10 @@ def near_duplicate_docs(docs: DataFrame, id_col: str = "doc_id",
     array row per doc; the exploded forms derive from it. Each checkpoint
     is written on the first action that reads it, replaces its lineage
     in every later plan, and lives in executor block storage until the
-    ContextCleaner frees it once the returned frame is unreferenced;
-    ``scope.release()`` does not free it, and an executor loss fails the
-    job instead of recomputing. ``scope`` governs only the band relation
-    :func:`lsh_candidate_pairs` persists (see
-    :mod:`webextract.functions.cache`).
+    ContextCleaner frees it once the returned frame is unreferenced, so
+    no caller releases anything; an executor loss fails the job instead
+    of recomputing.
     """
-    sc = resolve(scope)
     if candidates is not None:
         cands = candidates
     else:
@@ -623,8 +615,8 @@ def near_duplicate_docs(docs: DataFrame, id_col: str = "doc_id",
         # and the verify join; unmaterialized, each consumer would
         # recompute the whole minhash+band self-join subtree
         cands = lsh_candidate_pairs(
-            with_minhash(docs, id_col, text_col), id_col=id_col,
-            scope=sc).localCheckpoint(eager=False)
+            with_minhash(docs, id_col, text_col), id_col=id_col) \
+            .localCheckpoint(eager=False)
     sets = candidate_shingle_sets(docs, cands, id_col, text_col) \
         .localCheckpoint(eager=False)
     # set sizes ride THROUGH the verify join (one extra int per exploded

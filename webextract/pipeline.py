@@ -22,14 +22,13 @@ This is the Spark lifecycle of the reference's flagship entry point
 Scale notes (100 TB design point): ``extract_dataframe`` is scan →
 exchange → Python runner → write, with one shuffle: the salted
 repartition that re-balances raw WARC-sized input splits and isolates
-skew (``scan_mode="dual"`` scans twice and adds a round-robin exchange
-for the giants). ``run_extraction`` puts ``plan_todo`` in front, so the
-html column crosses two exchanges: the url-keyed one of
-``dropDuplicates``, then the salted one. The resume anti-join is a
-broadcast join only while the committed url set is small; at 10^12
-committed urls it is a shuffle join on the url key, which Catalyst plans
-as sort-merge and which reuses the url exchange; AQE handles
-post-shuffle sizing. Metrics derive from the *committed* output
+skew (giant pages hash into their own salt space). ``run_extraction``
+puts ``plan_todo`` in front, so the html column crosses two exchanges:
+the url-keyed one of ``dropDuplicates``, then the salted one. The resume
+anti-join is a broadcast join only while the committed url set is
+small; at 10^12 committed urls it is a shuffle join on the url key,
+which Catalyst plans as sort-merge and which reuses the url exchange;
+AQE handles post-shuffle sizing. Metrics derive from the *committed* output
 (column-pruned read-back of 5 int columns), so metrics and data can never
 disagree after a partial failure.
 """
@@ -102,12 +101,6 @@ class PipelineOptions:
     # session-catalog managed table (used by the tests).
     sink_format: str = "parquet"     # "parquet" | "iceberg"
     sink_is_table: bool = False
-    # "single": one scan, giants hashed into a dedicated salt space
-    #           (default — at 100 TB a second scan of the html column is
-    #           the dominant extra cost)
-    # "dual":   two scans, giants spread round-robin (tightest giant tail;
-    #           right when giants are both huge and frequent)
-    scan_mode: str = "single"
 
     def __post_init__(self) -> None:
         if self.sink_format not in ("parquet", "iceberg"):
@@ -224,29 +217,16 @@ def salted_repartition(df: DataFrame, opts: PipelineOptions) -> DataFrame:
     n*salt_factor)`` spreads hot key ranges evenly. Giant blobs
     (> ``giant_bytes``) must not queue behind one unlucky partition (the
     reference's per-record ``imap_unordered`` has the same
-    straggler-avoidance goal, ``data/preprocess.py:774-781``); two modes:
-
-    - ``single`` (default): ONE scan + ONE exchange — giants hash into a
-      dedicated fine-grained salt space (num_partitions extra buckets)
-      disjoint from the normal space. Expected giants per bucket ~
-      n_giants / num_partitions; the tail is a small constant factor of
-      one giant's parse time. At 100 TB the saved second scan of the
-      html column dominates that tail.
-    - ``dual``: two scans — giants split off and spread round-robin
-      (max one extra giant per slot). Tightest tail; pay the re-scan.
+    straggler-avoidance goal, ``data/preprocess.py:774-781``): ONE scan
+    and ONE exchange — giants hash into a dedicated fine-grained salt
+    space (num_partitions extra buckets) disjoint from the normal space.
+    Expected giants per bucket ~ n_giants / num_partitions; the tail is a
+    small constant factor of one giant's parse time. At 100 TB a second
+    scan of the html column to spread giants round-robin would cost more
+    than that tail.
     """
     size = F.coalesce(F.octet_length(F.col("html")), F.lit(0))
     n_salts = opts.num_partitions * opts.salt_factor
-    if opts.scan_mode == "dual":
-        giants = df.filter(size > opts.giant_bytes) \
-            .repartition(opts.num_partitions)
-        normal = (
-            df.filter(size <= opts.giant_bytes)
-            .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-            .repartition(opts.num_partitions, "_salt")
-            .drop("_salt")
-        )
-        return normal.unionByName(giants)
     # giant salt space is as fine-grained as the normal one (n_salts extra
     # values, disjoint range): with only num_partitions giant salts, the
     # salt->partition hash collides again and one partition can collect
