@@ -65,16 +65,21 @@ _SHINGLE_SQL = f"""
 """
 
 
-# scan-parallelism memo: tiny single-file tables pack into ONE scan
-# partition (openCostInBytes-based split packing), which serializes every
-# map-heavy operator — minhash folds, winnowing, quality features — on a
-# single core regardless of cluster width. The fix is the guide's
-# input-skew remedy: round-robin repartition straight after the read,
-# ONLY when the scan yields fewer partitions than the session's default
-# parallelism — at production scale the scan has thousands of splits and
-# this is a no-op (no added exchange). Partition count per (path, width)
-# is probed once per process; values are row-identical either way (every
-# query here is order-insensitive).
+# One read rule per driver table:
+# - documents (and the duplicated corpus built from it) and embeddings
+#   go through _spread: a tiny single-file table packs into ONE scan
+#   partition (openCostInBytes split packing), which would run every
+#   map-heavy operator on one core. _spread round-robin repartitions
+#   after the read ONLY when the scan has fewer partitions than the
+#   session's default parallelism, so it is a no-op at production scale.
+#   Aggregation-only consumers take it too: exempting 12 of them
+#   measured no faster (sf0.1, 4 cores, summed medians 3.22 / 3.77 s
+#   exempt vs 3.14 / 3.73 s spread, two sets of 10 interleaved reps).
+# - events is read as is: all its consumers are aggregations over a
+#   trivial per-row map, and spreading it cost 0.87 → 1.39 s over the
+#   three events queries in the same setup.
+# The partition count per (key, width) is probed once per process; rows
+# are identical either way (every query here is order-insensitive).
 _SCAN_PARTS: dict[tuple[str, int], int] = {}
 
 
@@ -92,18 +97,11 @@ def _read_spread(spark: SparkSession, path: str) -> DataFrame:
     return _spread(spark.read.parquet(path), path)
 
 
-def _docs(spark: SparkSession, sf_dir: str,
-          spread: bool = True) -> DataFrame:
-    # spread=False for aggregation-only consumers (one cheap map
-    # expression feeding a hash agg): their agg exchange already
-    # redistributes, so a pre-exchange buys nothing (measured +0.5 s)
-    if not spread:
-        return spark.read.parquet(f"{sf_dir}/documents.parquet")
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_spread(spark, f"{sf_dir}/documents.parquet")
 
 
-def _dup_corpus(spark: SparkSession, sf_dir: str,
-                spread: bool = True) -> DataFrame:
+def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread AFTER the union: one exchange for the whole duplicated
     # corpus instead of one per union branch
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
@@ -112,16 +110,11 @@ def _dup_corpus(spark: SparkSession, sf_dir: str,
         docs.filter(F.col("doc_id") % 7 == 0)
         .withColumn("doc_id", F.col("doc_id") + 100000)
     )
-    corpus = docs.unionByName(copies)
-    if not spread:
-        return corpus
-    return _spread(corpus, f"{sf_dir}/documents.parquet#dup")
+    return _spread(docs.unionByName(copies),
+                   f"{sf_dir}/documents.parquet#dup")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOT spread: the events queries are aggregation-only (trivial
-    # per-row map work), so a pre-aggregation exchange would cost more
-    # than the parallelism buys (measured +0.5 s at sf0.1)
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
@@ -207,7 +200,7 @@ def q_resume_todo(spark, sf_dir):
 
 
 def q_dedup_exact(spark, sf_dir):
-    return exact_duplicates(_dup_corpus(spark, sf_dir, spread=False))
+    return exact_duplicates(_dup_corpus(spark, sf_dir))
 
 
 def q_minhash_signatures(spark, sf_dir):
@@ -231,7 +224,7 @@ def q_lsh_candidates_wide(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    return simhash16(_docs(spark, sf_dir, spread=False))
+    return simhash16(_docs(spark, sf_dir))
 
 
 def q_jaccard_pairs(spark, sf_dir):
@@ -298,7 +291,7 @@ def q_paragraph_dedup(spark, sf_dir):
     # max_occurrences and are dropped, the unique bodies survive
     from webextract.functions.dedup import paragraph_dedup
 
-    docs = _docs(spark, sf_dir, spread=False).select("doc_id", "text")
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
     corpus = docs.withColumn(
         "text",
         F.concat(
@@ -494,9 +487,7 @@ def q_quality_scores_scripts(spark, sf_dir):
 
 
 def q_token_counts_by_source(spark, sf_dir):
-    # spread=False: only n_tokens survives pruning — a cheap split+size
-    # feeding one agg (A/B median 0.54 s vs 0.66 s with the exchange)
-    feats = with_text_features(_docs(spark, sf_dir, spread=False))
+    feats = with_text_features(_docs(spark, sf_dir))
     return feats.groupBy("source").agg(
         F.sum("n_tokens").alias("total_tokens"),
         F.round(F.avg("n_tokens"), 6).alias("avg_tokens"),
@@ -582,8 +573,7 @@ def _url_docs(spark, sf_dir):
     """documents + a deterministic url over five synthetic hosts."""
     host = F.element_at(F.array(*[F.lit(d) for d in _DOMAINS]),
                         (F.col("doc_id") % 5 + 1).cast("int"))
-    # spread=False: the sole consumer (domain_stats) is aggregation-only
-    return _docs(spark, sf_dir, spread=False).withColumn(
+    return _docs(spark, sf_dir).withColumn(
         "url", F.concat(F.lit("https://"), host, F.lit("/p/"),
                         F.col("doc_id").cast("string")))
 
@@ -648,7 +638,7 @@ def q_token_budget(spark, sf_dir):
     from webextract.functions.hygiene import token_budget_sample
 
     return token_budget_sample(
-        _docs(spark, sf_dir, spread=False), budget_tokens=3000,
+        _docs(spark, sf_dir), budget_tokens=3000,
         strata_col="source", priority_col="n_chars")
 
 
@@ -659,7 +649,7 @@ def q_token_budget_approx(spark, sf_dir):
     from webextract.functions.hygiene import token_budget_sample
 
     return token_budget_sample(
-        _docs(spark, sf_dir, spread=False), budget_tokens=3000,
+        _docs(spark, sf_dir), budget_tokens=3000,
         strata_col="source", priority_col="n_chars", mode="approx",
         buckets=8)
 
@@ -669,8 +659,7 @@ def q_stratified_sample(spark, sf_dir):
     # everything else — salted-hash cutoffs, no rand(), rerun-identical
     from webextract.functions.hygiene import stratified_sample
 
-    docs = _docs(spark, sf_dir, spread=False) \
-        .select("doc_id", "lang", "source")
+    docs = _docs(spark, sf_dir).select("doc_id", "lang", "source")
     return stratified_sample(docs, {"en": 0.5, "de": 0.25},
                              strata_col="lang", default_rate=0.1)
 
@@ -801,11 +790,7 @@ def q_block_scores(spark, sf_dir):
 def _media_table(spark, sf_dir):
     from webextract.functions.text import norm_text
 
-    # spread=False: the fake-backend media ops are trivial per row at
-    # this size — A/B median 0.39/0.33 s vs 0.60/0.57 s with the
-    # exchange (at real-media scale the python stage dominates and the
-    # table arrives pre-partitioned from the crawl sink anyway)
-    return _docs(spark, sf_dir, spread=False).select(
+    return _docs(spark, sf_dir).select(
         F.col("doc_id").alias("media_id"),
         F.encode(norm_text("text"), "UTF-8").alias("payload"),
         F.element_at(

@@ -236,3 +236,66 @@ def test_text_features_shared_arrays_single_evaluation(spark, docs):
     assert len(re.findall(r"split\(norm", optimized)) == 1       # _toks
     assert len(re.findall(r"split\(text", optimized)) == 1       # _lines
     assert len(re.findall(r"aggregate\(", optimized)) == 1       # _top2
+
+
+def test_driver_reads_spread_by_table(spark):
+    # one read rule per driver table: every documents-fed query, map-heavy
+    # or aggregation-only alike, gets the round-robin spread of the
+    # one-split sf0.001 scan; events, whose consumers are all
+    # aggregations, is read as is. Checked on the executed (AQE final)
+    # plans, so a spread that AQE would drop does not count.
+    import __spark_entry__ as entrymod
+
+    if spark.sparkContext.defaultParallelism == 1:
+        pytest.skip("one core: _spread never repartitions")
+    qs = entrymod.queries()
+
+    def executed(name: str) -> str:
+        df = qs[name](spark, SF)
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "RoundRobinPartitioning" in executed("dedup_exact")
+    assert "RoundRobinPartitioning" in executed("media_features")
+    assert "RoundRobinPartitioning" not in executed("events_confusion")
+
+
+def test_driver_scan_probe_is_keyed_by_width():
+    # a scan's split count follows the session width, so the probe memo
+    # is keyed by (table, width): a count probed at width 8 and reused at
+    # width 16 would spread a scan that already fills the 16 cores
+    from types import SimpleNamespace as NS
+
+    import __spark_entry__ as entrymod
+
+    probes: list[int] = []
+    for width in (8, 16, 16):
+        df = NS(sparkSession=NS(sparkContext=NS(defaultParallelism=width)),
+                rdd=NS(getNumPartitions=lambda w=width: probes.append(w) or w),
+                repartition=lambda n: "spread")
+        assert entrymod._spread(df, "test://probe-by-width") is df
+    assert probes == [8, 16]
+
+
+def test_curate_full_decontamination_explodes_distinct_grams(spark,
+                                                             monkeypatch):
+    # both sides of curate_full's decontamination semi-join explode each
+    # text's DISTINCT 8-gram hashes: a boilerplate-heavy doc repeats
+    # grams, and each repeat would be one more row into the join.
+    # curate_full checkpoints the decontaminated frame, which cuts it out
+    # of the final plan, so plans are read as they are checkpointed.
+    import __spark_entry__ as entrymod
+
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+    plans: list[str] = []
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    entrymod.q_curate_full(spark, SF)
+    text = "\n".join(plans)
+    assert text.count("explode(array_distinct(transform(") == 2, plans
+    assert "explode(transform(" not in text

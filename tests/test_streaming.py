@@ -59,10 +59,9 @@ def test_stream_matches_batch_and_resumes(spark, staged, tmp_path):
     assert diff.count() == 0
 
 
-def test_stream_span_rates_windowed(spark, staged, tmp_path):
+def test_stream_span_rates_windowed(spark, staged):
     base, _ = staged
-    agg = stream_span_rates(spark, f"{base}/drop_*.parquet",
-                            str(tmp_path / "cp2"))
+    agg = stream_span_rates(spark, f"{base}/drop_*.parquet")
     q = (agg.writeStream.format("memory").queryName("rates")
          .outputMode("complete").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -74,12 +73,12 @@ def test_stream_span_rates_windowed(spark, staged, tmp_path):
         assert r["window_start"] is not None
 
 
-def test_span_rates_does_not_mutate_global_schema(spark, staged, tmp_path):
+def test_span_rates_does_not_mutate_global_schema(spark, staged):
     from webextract.schema import EXTRACTED_SCHEMA
 
     names_before = [f.name for f in EXTRACTED_SCHEMA.fields]
     base, _ = staged
-    stream_span_rates(spark, f"{base}/drop_0.parquet", str(tmp_path / "cp3"))
+    stream_span_rates(spark, f"{base}/drop_0.parquet")
     assert [f.name for f in EXTRACTED_SCHEMA.fields] == names_before
     assert "warc_ts" not in names_before
 

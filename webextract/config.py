@@ -33,9 +33,6 @@ REGION_CLASSES: tuple[str, ...] = (
     "title",
 )
 
-# region class -> contiguous id, background == 0 (xml_regions.py:210-220)
-REGION_CLASS_IDS: dict[str, int] = {c: i for i, c in enumerate(REGION_CLASSES)}
-
 # region class -> region *type* (element-tag group) — the analog of the
 # reference's region→PAGE-element mapping (xml_regions.py:179-208, default
 # TextRegion).

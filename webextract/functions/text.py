@@ -38,7 +38,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 LANG_THRESHOLD = 0.04  # best marker ratio below this → 'und'
 
-EN_MARKERS: tuple[str, ...] = LANG_MARKERS["en"]
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "in", "to", "is")
 
 # Unicode-script detection (round 6): the Latin marker argmax maps every
@@ -131,32 +130,6 @@ def marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
 def stopword_hits(toks: Column) -> Column:
     """Total stopword token count of the normalized token array."""
     return marker_hits(toks, STOPWORDS)
-
-
-def lang_guess(toks: Column, n_tokens: Column) -> Column:
-    """Marker-ratio language guess over :data:`LANG_MARKERS`: per
-    language, the fraction of tokens that are that language's function
-    words; the guess is the argmax (alphabetical tiebreak via the CASE
-    order), or 'und' when no language reaches :data:`LANG_THRESHOLD`.
-
-    bigint/bigint division is correctly-rounded IEEE double in both
-    Spark and DuckDB, so the ratio comparisons are engine-exact. Hit
-    counts are one token-array pass per language (see
-    :func:`marker_hits`); prefer :func:`with_text_features`, whose
-    projection boundary evaluates each ratio once — inlined as a single
-    Column, every ratio is referenced by ``greatest`` AND its own CASE
-    arm.
-    """
-    ratios: dict[str, Column] = {}
-    for code in sorted(LANG_MARKERS):
-        hits = marker_hits(toks, LANG_MARKERS[code])
-        ratios[code] = F.when(n_tokens > 0, hits / n_tokens) \
-            .otherwise(F.lit(0.0))
-    best = F.greatest(*ratios.values())
-    expr = F.when(best < F.lit(LANG_THRESHOLD), F.lit("und"))
-    for code in sorted(ratios):
-        expr = expr.when(ratios[code] == best, F.lit(code))
-    return expr.otherwise(F.lit("und"))  # unreachable; keeps type total
 
 
 # word-or-punct token pattern for the BPE-ish count: alnum runs count as

@@ -109,8 +109,6 @@ def decode_payload(payload: bytes) -> str:
 # block tokenizer
 # ---------------------------------------------------------------------------
 
-_WS_NORM = re.compile(r"\s+")
-
 
 def _normalize_ws(raw: str) -> str:
     """Collapse whitespace runs to single spaces and strip.

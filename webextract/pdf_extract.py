@@ -46,7 +46,6 @@ _STREAM_START_RE = re.compile(rb"stream\r?\n")
 # + '8 0 R' and sneak past the R-reference lookahead
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?!\d)(?!\s+\d+\s+R)")
 _BT_ET_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
-_TF_RE = re.compile(rb"/\S+\s+(\d+(?:\.\d+)?)\s+Tf")
 # tokens inside a text object we care about, in order
 _TOK_RE = re.compile(
     rb"""

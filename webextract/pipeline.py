@@ -91,7 +91,6 @@ def _git_hash() -> str:
 class PipelineOptions:
     num_partitions: int = 32
     giant_bytes: int = 1 << 20       # blobs above this get their own routing
-    salt_factor: int = 4             # salt buckets per target partition
     # sink provider + addressing: with ``sink_is_table=False`` (default)
     # the output argument is a filesystem path and ``sink_format`` must be
     # "parquet"; with ``sink_is_table=True`` the output argument is a
@@ -189,21 +188,18 @@ def completed_urls(spark: SparkSession, output: str,
     return None if committed is None else committed.select("url")
 
 
-def plan_todo(pages: DataFrame, done: DataFrame | None,
-              dedupe: bool = True) -> DataFrame:
+def plan_todo(pages: DataFrame, done: DataFrame | None) -> DataFrame:
     """Resume anti-join: only never-committed urls are (re)processed.
 
-    ``dedupe`` is the S2 ingest guard (reference duplicate-name check,
-    ``data/preprocess.py:241-281``): crawl tables can carry duplicate urls;
-    exactly one row per url survives. The dropDuplicates and the left_anti
+    The ``dropDuplicates`` is the S2 ingest guard (reference duplicate-name
+    check, ``data/preprocess.py:241-281``): crawl tables can carry
+    duplicate urls; exactly one row per url survives. It and the left_anti
     join shuffle on the same key, so Catalyst/AQE reuses the exchange —
     one url-keyed shuffle total, not two. Combined with deterministic span
     ids (P14) this makes reruns after partial failure idempotent: no
     duplicates, no gaps.
     """
-    pages = pages.filter(F.col("url").isNotNull())
-    if dedupe:
-        pages = pages.dropDuplicates(["url"])
+    pages = pages.filter(F.col("url").isNotNull()).dropDuplicates(["url"])
     if done is None:
         return pages
     return pages.join(done, "url", "left_anti")
@@ -214,19 +210,20 @@ def salted_repartition(df: DataFrame, opts: PipelineOptions) -> DataFrame:
     UDF-stage value skew — AQE only fixes shuffle-size skew).
 
     Normal pages: salted url-hash repartition — ``pmod(xxhash64(url),
-    n*salt_factor)`` spreads hot key ranges evenly. Giant blobs
-    (> ``giant_bytes``) must not queue behind one unlucky partition (the
-    reference's per-record ``imap_unordered`` has the same
-    straggler-avoidance goal, ``data/preprocess.py:774-781``): ONE scan
-    and ONE exchange — giants hash into a dedicated fine-grained salt
-    space (num_partitions extra buckets) disjoint from the normal space.
+    4n)``, four salts per target partition, spreads hot key ranges
+    evenly. Giant blobs (> ``giant_bytes``) must not queue behind one
+    unlucky partition (the reference's per-record ``imap_unordered`` has
+    the same straggler-avoidance goal, ``data/preprocess.py:774-781``):
+    ONE scan and ONE exchange — giants hash into a dedicated
+    fine-grained salt space (4n extra buckets) disjoint from the normal
+    space.
     Expected giants per bucket ~ n_giants / num_partitions; the tail is a
     small constant factor of one giant's parse time. At 100 TB a second
     scan of the html column to spread giants round-robin would cost more
     than that tail.
     """
     size = F.coalesce(F.octet_length(F.col("html")), F.lit(0))
-    n_salts = opts.num_partitions * opts.salt_factor
+    n_salts = opts.num_partitions * 4
     # giant salt space is as fine-grained as the normal one (n_salts extra
     # values, disjoint range): with only num_partitions giant salts, the
     # salt->partition hash collides again and one partition can collect

@@ -202,7 +202,6 @@ def stream_dedup_extraction(spark: SparkSession, input_path: str,
 
 
 def stream_span_rates(spark: SparkSession, input_path: str,
-                      checkpoint_path: str,
                       cfg: ExtractConfig = DEFAULT_CONFIG,
                       window: str = "1 hour",
                       watermark: str = "2 hours"):
